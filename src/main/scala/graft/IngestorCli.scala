@@ -226,19 +226,25 @@ object IngestorCli {
         Sinks.jdbcAppend(rows, a.checkpoint, a.cfg.jdbcUrl, a.cfg.tableOrDefault,
           extraOptions = a.cfg.jdbcAuthOptions)
 
-    val query = writer.start()
-    if (a.mode == "synthetic") {
-      // bounded run then park (reference semantics, cmd/root.go:143-146):
-      // here "park" = clean stop after the duration
-      SyntheticSource.runBounded(query, a.durationS * 1000L)
-    } else if (fileBroker(a).isDefined) {
-      // file transport is a finite fixture, not an endless topic:
-      // drain everything present, then stop cleanly
-      query.processAllAvailable()
-      query.stop()
-      query.awaitTermination()
-    } else {
-      query.awaitTermination()
+    // fork-free checkpoint log writes on `file:` checkpoints for the
+    // query's whole life, unless the session already names its own
+    // checkpoint file manager
+    val query = LocalCheckpointFileManager.registeredFor(spark) {
+      val q = writer.start()
+      if (a.mode == "synthetic") {
+        // bounded run then park (reference semantics, cmd/root.go:143-146):
+        // here "park" = clean stop after the duration
+        SyntheticSource.runBounded(q, a.durationS * 1000L)
+      } else if (fileBroker(a).isDefined) {
+        // file transport is a finite fixture, not an endless topic:
+        // drain everything present, then stop cleanly
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+      } else {
+        q.awaitTermination()
+      }
+      q
     }
     // the listener bus delivers asynchronously: without this barrier
     // the final micro-batches may be missing from the rendered counts

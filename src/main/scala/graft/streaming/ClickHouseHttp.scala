@@ -50,9 +50,14 @@ object SinkAccumulators {
   *  - one POST per PARTITION of a micro-batch (via
   *    [[Sinks.jsonEachRowPost]]), not per row — the reference's
   *    one-row-per-POST loop is its throughput ceiling (SURVEY.md §6).
-  *  - failure → exception: Spark retries the task, so delivery is
-  *    at-least-once; downstream stays idempotent via `_lsn` versioning
-  *    (ST3), same contract as the JDBC path.
+  *  - failure → exception, which fails the task. Under the CLI default
+  *    `local[*]` a task is never retried (`spark.task.maxFailures` is 1
+  *    in local mode), so one failed POST ends the stream. The batch is
+  *    replayed only when the query restarts from its checkpoint, and
+  *    the replay re-POSTs partitions that had already landed. `_lsn`
+  *    versioning (ST3) makes that harmless for `app.users_cur`; the
+  *    append-only `events_db.events` counts them twice. Same contract
+  *    as the JDBC path.
   *
   * The case class is a plain serializable `String => Unit`, so it
   * ships to executors as a closure; the client and metrics live in the
@@ -190,9 +195,12 @@ object ClickHouseHttp {
 
   /** The full S5 streaming path over this transport: translate rows →
     * JSONEachRow wire bytes → one POST per non-empty partition per
-    * micro-batch. Checkpointed, at-least-once; a mid-batch retry may
-    * re-POST partitions — ClickHouse-side idempotency comes from the
-    * versioned engine (`_lsn`), exactly the reference's contract.
+    * micro-batch. Checkpointed, at-least-once across restarts: a failed
+    * POST fails the batch, and under `local[*]` the query with it (no
+    * task retries). Restarting from the checkpoint replays the whole
+    * batch, re-POSTing partitions that had already landed. The
+    * versioned engine (`_lsn`) absorbs the replay for `app.users_cur`,
+    * the reference's contract; an append-only table counts it twice.
     */
   def append(writer: DataFrame, checkpoint: String, sink: ClickHouseHttp): DataStreamWriter[Row] =
     writer.writeStream

@@ -46,8 +46,12 @@ object Sinks {
   /** S5: foreachBatch append to a JDBC table (ClickHouse in the
     * reference deployment; any JDBC URL works — BASELINE.json's
     * "Structured Streaming + JDBC sink"). Batched, connection-pooled
-    * by the JDBC driver, at-least-once with checkpointing; idempotent
-    * downstream via `_lsn` versioning (ST3).
+    * by the JDBC driver. A failed write fails the batch; under the CLI
+    * default `local[*]` a task is never retried, so the query stops.
+    * The batch is replayed only on restart from the checkpoint, and
+    * rows that had already landed land again: idempotent downstream
+    * only where `_lsn` versioning (ST3) applies, as on `app.users_cur`,
+    * never on an append-only table such as `events_db.events`.
     */
   def jdbcAppend(
       writer: DataFrame, checkpoint: String,

@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.streaming.ClickHouseHttp
+import graft.streaming.{ClickHouseHttp, LocalCheckpointFileManager}
 import scala.jdk.CollectionConverters._
 
 /** CLI flag/env parsing mirrors the reference's cobra surface
@@ -138,6 +138,73 @@ class IngestorCliSpec extends SparkSpec {
     assert(m.rowsTotal.get === 7L, m.render())
     assert(m.batchesTotal.get >= 1L)
     assert(m.errorsTotal.get === 0L)
+  }
+
+  /** Drains file set A, adds set B, restarts on the same checkpoint:
+    * the second run must read only B, so every row lands exactly once.
+    * `firstManager` names the checkpoint file manager of run 1 (None =
+    * the one `IngestorCli.run` registers); run 2 always uses the
+    * registered one.
+    */
+  private def restartDrainsOnlyNewFiles(firstManager: Option[String]): Unit = {
+    val dir = Files.createTempDirectory("graft-cli-restart").toString
+    val topic = java.nio.file.Paths.get(dir, "topic")
+    Files.createDirectories(topic)
+    def addFiles(tag: String, ids: Seq[Range]): Unit = ids.zipWithIndex.foreach { case (r, i) =>
+      Files.writeString(topic.resolve(s"$tag-$i.jsonl"), r.map { id =>
+        s"""{"before":null,"after":{"id":$id,"name":"n$id","email":"e$id"},"source":{"lsn":$id,"ts_us":$id},"op":"c","ts_us":$id}"""
+      }.mkString("", "\n", "\n"))
+    }
+    val out = s"$dir/out"
+    def drain() = IngestorCli.run(spark, IngestorCli.Args(
+      mode = "cdc",
+      cfg = graft.pipeline.IngestConfig(brokers = Seq(s"file:$topic"), metricsPort = 0),
+      sink = s"parquet:$out",
+      checkpoint = s"$dir/ckpt"))
+    val key = LocalCheckpointFileManager.ConfKey
+
+    addFiles("a", Seq(1 to 10, 11 to 25, 26 to 30))
+    val m1 = firstManager match {
+      case Some(cls) =>
+        spark.conf.set(key, cls)
+        try {
+          val m = drain()
+          assert(spark.conf.getOption(key) === Some(cls), "a session's own manager is kept")
+          m
+        } finally spark.conf.unset(key)
+      case None => drain()
+    }
+    assert(spark.conf.getOption(key).isEmpty, "the run leaves the session's conf as it was")
+    assert(m1.rowsTotal.get === 30L, m1.render())
+    // offset WAL, commit log and file-source log: batch ids on disk
+    val logs = Seq("offsets", "commits", "sources/0").map(java.nio.file.Paths.get(dir, "ckpt", _))
+    def batches() = logs.map(l => Files.list(l).iterator.asScala
+      .map(_.getFileName.toString).flatMap(_.toLongOption).toSet)
+    val batchesAfterA = batches()
+
+    addFiles("b", Seq(31 to 40, 41 to 50))
+    val m2 = drain()
+    assert(m2.rowsTotal.get === 20L, s"the restart re-read set A: ${m2.render()}")
+    val ids = spark.read.parquet(out).select("id").collect().map(_.getLong(0)).toSeq
+    assert(ids.sorted === (1L to 50L), "every input row lands exactly once")
+
+    // the restart's log entries went through the fork-free manager:
+    // Spark's default writes a .crc sidecar beside each entry, it does not
+    logs.zip(batchesAfterA).zip(batches()).foreach { case ((log, before), after) =>
+      assert((after -- before).nonEmpty, log)
+      (after -- before).foreach(b => assert(!Files.exists(log.resolve(s".$b.crc")), s"$log/$b"))
+      before.foreach(b => assert(
+        Files.exists(log.resolve(s".$b.crc")) === firstManager.isDefined, s"$log/$b"))
+    }
+  }
+
+  test("cdc restart from the checkpoint drains only the new files") {
+    restartDrainsOnlyNewFiles(firstManager = None)
+  }
+
+  test("cdc restart: a checkpoint written by Spark's default manager keeps working") {
+    restartDrainsOnlyNewFiles(firstManager = Some(
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName))
   }
 
   test("S2 contract: kafka source options pin delivery semantics without a broker") {
