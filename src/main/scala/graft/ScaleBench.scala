@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * candidate/verify work grows — is isolated.
   *
   * Usage: runMain graft.ScaleBench [baseDir] [factor]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_PASSES
+  * Env: SPARK_GRAFT_CPUS (default: available processors), SPARK_GRAFT_SCALE_PASSES
   * (default 1 — the exact paths at 10× run minutes; min-of-N is
   * available when the host is noisy), SPARK_GRAFT_SCALE_PATHS
   * (substring filter on path names, e.g. "embed" to measure only the
@@ -137,20 +137,13 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "1").toInt.max(1)
     // the serving tier's contract floor; its probe width now DERIVES
     // from this via Similarity.servingConfigFor (the measured
     // recall-vs-probe curve), so the arm below and its assertion are
     // parameterized by one constant
     val servingTarget = 0.9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val bigDir = scaledDir(spark, baseDir, factor)
 

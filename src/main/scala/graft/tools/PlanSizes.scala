@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Optimization-round survey: rank every registered query by
   * formatted-plan size and planning wall — plan size is the proxy for
@@ -11,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanSizes {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(shufflePartitions = Some(32))
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     for (q <- names) {

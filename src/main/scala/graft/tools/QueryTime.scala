@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Local iteration helper: time a comma-separated subset of the
   * registry (SPARK_GRAFT_ONLY, same contract as Verify's filter) at
@@ -13,16 +12,9 @@ import org.apache.spark.sql.SparkSession
 object QueryTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter {
       case (name, _) => only.forall(_.contains(name))
     }

@@ -80,20 +80,26 @@ class DedupSimilaritySpec extends SparkSpec {
   test("operator-scoped caches are released after the consuming action (no block leak)") {
     requireTestdata()
     val docs01 = Tables.table(spark, "/root/testdata/sf0.001", "documents")
-    def cachedBlocks: Int =
-      spark.sparkContext.getRDDStorageInfo.count(_.numCachedPartitions > 0)
+    // RDDs the operator persisted that are still persisted. Read from
+    // the persistence list, which unpersist updates synchronously: the
+    // cached-partition counts of getRDDStorageInfo come from the status
+    // store, which the listener bus fills asynchronously, so they can
+    // read 0 before the blocks are recorded and 1 a moment later.
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     Seq(
       () => Dedup.minhashNearDup(docs01, "doc_id", col("text"),
         k = 2, bands = 4, rowsPerBand = 3, minJ = 0.8),
       () => Dedup.ngramJaccard(docs01, "doc_id", col("text"), k = 2, minJ = 0.5),
       () => Dedup.simhashNearDup(docs01, "doc_id", col("text"), maxHamming = 12)
     ).foreach { op =>
+      val before = persisted
       op().count() // consuming action: caches populate, then release
       // QueryExecutionListener callbacks are async — poll with deadline
       val deadline = System.currentTimeMillis() + 10000
-      while (cachedBlocks > 0 && System.currentTimeMillis() < deadline)
+      while ((persisted -- before).nonEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(50)
-      assert(cachedBlocks === 0, "cached signature tables must not outlive the action")
+      assert((persisted -- before).isEmpty,
+        "cached signature tables must not outlive the action")
     }
   }
 
