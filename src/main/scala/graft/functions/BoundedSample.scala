@@ -56,6 +56,8 @@ class BoundedTopK(k: Int)
       BoundedTopK.Out] {
   import BoundedTopK._
   require(k >= 1, "need k >= 1")
+  // plan text prints the aggregator: keep it free of identity hashes
+  override def toString: String = s"BoundedTopK($k)"
 
   override def zero: Buf = Buf(Vector.empty)
 
@@ -83,6 +85,7 @@ class BoundedSample(n: Int)
       BoundedSample.Out] {
   import BoundedSample._
   require(n >= 1, "need n >= 1")
+  override def toString: String = s"BoundedSample($n)"
 
   override def zero: Buf = Buf(Vector.empty)
 

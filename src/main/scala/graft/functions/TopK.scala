@@ -48,6 +48,8 @@ class TopK(k: Int, capacity: Int)
   override def finish(r: Buf): Out = weighted.finish(r)
   override def bufferEncoder: Encoder[Buf] = weighted.bufferEncoder
   override def outputEncoder: Encoder[Out] = weighted.outputEncoder
+  // plan text prints the aggregator: keep it free of identity hashes
+  override def toString: String = s"TopK($k, $capacity)"
 }
 
 /** ClickHouse `topKWeighted`: heavy hitters by SUMMED WEIGHT rather
@@ -65,6 +67,7 @@ class TopKWeighted(k: Int, capacity: Int)
     extends Aggregator[(String, Long), TopK.Buf, TopK.Out] {
   import TopK._
   require(k >= 1 && capacity >= k, "need capacity >= k >= 1")
+  override def toString: String = s"TopKWeighted($k, $capacity)"
 
   override def zero: Buf = Buf(Map.empty)
 

@@ -30,6 +30,8 @@ case class UniqUpToState(sorted: Array[String])
   */
 class UniqUpTo(n: Int) extends Aggregator[String, UniqUpToState, Long] {
   require(n >= 1, s"n must be >= 1: $n")
+  // plan text prints the aggregator: keep it free of identity hashes
+  override def toString: String = s"UniqUpTo($n)"
 
   override def zero: UniqUpToState = UniqUpToState(Array.empty)
 

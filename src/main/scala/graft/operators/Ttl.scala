@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** L4: age-based lifecycle — ClickHouse MergeTree `TTL` semantics
   * for the ingested tables the reference lands
@@ -122,13 +122,6 @@ object Ttl {
     else Files.readString(p).trim.toLong
   }
 
-  private def writePointer(path: String, bucket: Long): Unit = {
-    val tmp = Paths.get(path, "_ROLLED.tmp")
-    Files.writeString(tmp, bucket.toString)
-    Files.move(tmp, pointerPath(path),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Ingest face: append raw rows as degenerate aggregates of
     * themselves (the [[rollup]] fresh branch), partitioned on the
     * rollup time bucket — the layout the maintenance pass prunes by.
@@ -210,7 +203,8 @@ object Ttl {
       case None =>
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
-    writePointer(path, agedThrough)
+    graft.streaming.StateStore.writeAtomic(pointerPath(path),
+      agedThrough.toString)
   }
 
   /** The read face: the maintained table in [[rollup]]'s uniform

@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.functions.BitmapAgg
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming maintenance of A41 exact-bitmap segment states — the
   * EXACT complement of [[StreamingTheta]], completing the segment-
@@ -24,12 +22,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * does the exactness work (same protocol as every store in the
   * family).
   *
-  * Store layout and commit protocol are [[StreamingMatView]]'s:
-  * `state-<version>/` parquet under an atomically-moved `_CURRENT`
-  * pointer; cleanup walks DOWNWARD from state-(next-2) while
-  * directories exist (amortized O(1) per commit, self-healing after
-  * a crash between writePointer and the delete — the round-19
-  * StreamingHistogram rule).
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol.
   *
   * Scale shape: the merge reads |keys| state rows + one batch's
   * partials; raw volume reaches one (keys) aggregate per batch and
@@ -40,10 +34,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * current commit point without touching raw history.
   */
 object StreamingBitmap {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   /** One serialized bitmap per key over this batch's ids. */
   def partialState(batch: DataFrame, keys: Seq[String],
@@ -56,15 +46,10 @@ object StreamingBitmap {
     states.groupBy(keys.map(col): _*)
       .agg(BitmapAgg.bitmapOrAgg(col("bitmap_state")).as("bitmap_state"))
 
-  /** The committed state table (raw, mergeable). Empty-safe. */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** Read face: EXACT per-key distinct counts at the commit point. */
   def currentCardinalities(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    readState(spark, stateDir, template)
+    StateStore.readVersioned(spark, stateDir, template)
       .select((keys.map(col) :+
         BitmapAgg.bitmapCardinality(col("bitmap_state"))
           .as("n_distinct")): _*)
@@ -76,7 +61,7 @@ object StreamingBitmap {
   def segmentAlgebra(spark: SparkSession, stateDir: String,
       keyCol: String, a: String, b: String,
       template: DataFrame): DataFrame = {
-    val state = readState(spark, stateDir, template)
+    val state = StateStore.readVersioned(spark, stateDir, template)
     val sa = state.where(col(keyCol) === a)
       .select(col("bitmap_state").as("__sa"))
     val sb = state.where(col(keyCol) === b)
@@ -95,7 +80,7 @@ object StreamingBitmap {
     */
   def contains(spark: SparkSession, stateDir: String, keyCol: String,
       segment: String, id: Long, template: DataFrame): DataFrame =
-    readState(spark, stateDir, template)
+    StateStore.readVersioned(spark, stateDir, template)
       .where(col(keyCol) === segment)
       .select(BitmapAgg.bitmapContains(col("bitmap_state"), lit(id))
         .as("is_member"))
@@ -105,26 +90,7 @@ object StreamingBitmap {
     * stream. Replays (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], id: Column,
-      stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = partialState(batch, keys, id)
-      val cur = readState(spark, stateDir, partial)
-      mergeStates(cur.unionByName(partial), keys)
-        .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: exactly-once per micro-batch via
-    * foreachBatch; every read face between batches equals the batch
-    * aggregate over everything ingested so far, EXACTLY.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], id: Column,
-      stateDir: String, checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, id, stateDir, batchId)
-      }
+      stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId, partialState(batch, keys, id))(
+      mergeStates(_, keys))
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming maintenance of the W1f CollapsingMergeTree `FINAL` view
   * ([[graft.operators.Collapsing.collapseFinal]]) — the CDC
@@ -31,18 +29,13 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * the net it decrements — the state is |keys ever seen| rows, the
   * same posture as the ClickHouse engine's own sorting-key space.
   *
-  * Store layout + commit protocol are [[StreamingMatView]]'s:
-  * `state-<version>/` tables under an atomically-moved `_CURRENT`
-  * pointer; replayed batchIds are no-ops, crash orphans are
-  * overwritten. Scale shape per batch: one partial aggregate of the
-  * batch (map-side combine — the sign pairs collapse before the
-  * shuffle) + a merge over |keys| state rows, never the sign history.
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol. Scale shape per batch: one partial
+  * aggregate of the batch (map-side combine — the sign pairs collapse
+  * before the shuffle) + a merge over |keys| state rows, never the
+  * sign history.
   */
 object StreamingCollapse {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   private def payloadCols(df: DataFrame, keys: Seq[String],
       signCol: String): Seq[String] =
@@ -80,35 +73,11 @@ object StreamingCollapse {
       .drop("net", "cand")
   }
 
-  /** The committed state table (raw, mergeable); empty-safe. */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** Fold ONE micro-batch of signed rows into the store; replays
     * (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], signCol: String,
-      ordCols: Seq[String], stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = partialState(batch, keys, signCol, ordCols)
-      val cur = readState(spark, stateDir, partial)
-      val merged = mergeStates(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink via foreachBatch — exactly-once FINAL-view
-    * maintenance with the commit-pointer protocol.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], signCol: String,
-      ordCols: Seq[String], stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, signCol, ordCols, stateDir, batchId)
-      }
+      ordCols: Seq[String], stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      partialState(batch, keys, signCol, ordCols))(mergeStates(_, keys))
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
 import graft.operators.Curation
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** ST23 — streaming maintenance of the X30 collocation counts: the
   * phrase table served live. A crawl-ingest pipeline wants "what are
@@ -23,23 +20,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Scale shape: each batch pays one explode + two hash aggregates
   * over its own rows; the merge touches vocabulary + pair-table
   * sized state, bounded by the corpus' DISTINCT token/bigram sets,
-  * not ingest volume. Store layout and commit protocol are the
-  * family's verbatim: `state-<version>/` parquet under an
-  * atomically-moved `_CURRENT` pointer, batchId replay guard,
-  * DOWNWARD-walk O(1) crash-self-healing cleanup.
+  * not ingest volume. State is one `state-<version>/` table per
+  * applied batch under the [[StateStore]] protocol.
   */
 object StreamingCollocations {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
-
-  /** The committed count state (raw [[Curation.collocationCounts]]
-    * rows). Empty-safe.
-    */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
 
   /** Read face: the live phrase table — PMI/NPMI at the current
     * commit point, [[Curation.collocationsFromCounts]] verbatim.
@@ -47,30 +31,12 @@ object StreamingCollocations {
   def currentCollocations(spark: SparkSession, stateDir: String,
       minCount: Int, template: DataFrame): DataFrame =
     Curation.collocationsFromCounts(
-      readState(spark, stateDir, template), minCount)
+      StateStore.readVersioned(spark, stateDir, template), minCount)
 
   /** Fold ONE ingest batch into the store; replays are no-ops. */
   def applyBatch(batch: DataFrame, text: Column, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = Curation.collocationCounts(batch, text)
-      val cur = readState(spark, stateDir, partial)
-      val merged = Curation.mergeCollocationCounts(cur.unionByName(partial))
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: exactly-once per micro-batch; the live
-    * phrase table between batches equals the batch operator over
-    * everything ingested.
-    */
-  def maintain(stream: DataFrame, text: Column, stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, text, stateDir, batchId)
-      }
+      batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      Curation.collocationCounts(batch, text))(
+      Curation.mergeCollocationCounts)
 }

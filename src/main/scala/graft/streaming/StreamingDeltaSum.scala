@@ -3,8 +3,6 @@ package graft.streaming
 import graft.operators.TimeSeries
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming maintenance of W4d counter analytics
   * ([[TimeSeries.deltaSum]] — ClickHouse `deltaSum`, Prometheus
@@ -43,9 +41,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * Store layout: `state-<version>/closed` (one mergeable state row
   * per (keys, slice)) + `state-<version>/pending` (raw rows of open
-  * slices) under [[StreamingMatView]]'s atomically-moved `_CURRENT`
-  * pointer (extended with the watermark: "version batchId wm");
-  * replayed batchIds are no-ops, crash orphans are overwritten.
+  * slices) under the [[StateStore]] protocol, with the watermark as
+  * the pointer's one payload field.
   * Scale shape per batch: one partial fold of (pending ∪ batch) —
   * pending is bounded by delay × arrival rate, never history — plus
   * a closed-table append of |closing slices × keys| rows. The
@@ -55,26 +52,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingDeltaSum {
 
-  private def pointerPath(stateDir: String) = Paths.get(stateDir, "_CURRENT")
+  private val Initial = Seq(Long.MinValue)
 
   /** (version, lastAppliedBatchId, watermark); (0, -1, Long.MinValue)
     * before the first commit.
     */
   def readPointer(stateDir: String): (Long, Long, Long) = {
-    val p = pointerPath(stateDir)
-    if (!Files.exists(p)) (0L, -1L, Long.MinValue)
-    else {
-      val parts = Files.readString(p).trim.split(" ")
-      (parts(0).toLong, parts(1).toLong, parts(2).toLong)
-    }
-  }
-
-  private def writePointer(stateDir: String, version: Long, batchId: Long,
-      wm: Long): Unit = {
-    val tmp = Paths.get(stateDir, s"_CURRENT.tmp")
-    Files.writeString(tmp, s"$version $batchId $wm")
-    Files.move(tmp, pointerPath(stateDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val p = StateStore.pointer(stateDir, Initial)
+    (p.version, p.batchId, p.payload(0))
   }
 
   /** Samples normalized to the store schema: keys ++ (__ts, __tie,
@@ -104,48 +89,41 @@ object StreamingDeltaSum {
     require(sliceSeconds > 0, s"sliceSeconds must be positive: $sliceSeconds")
     require(delaySeconds >= 0, s"delaySeconds must be >= 0: $delaySeconds")
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
-    val (curVer, lastBatch, wmOld) = readPointer(stateDir)
-    if (batchId <= lastBatch) return
-    val norm = normalize(batch, keys, ts, tie, value, sliceSeconds)
-    val pending =
-      if (curVer == 0L) spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), norm.schema)
-      else readDir(spark, s"$stateDir/state-$curVer/pending")
-    // late-beyond-watermark rows target an already-closed slice and
-    // must be dropped — folding them would break slice disjointness
-    val sliceEnd = (col("__slice") + 1) * sliceSeconds
-    val rows = pending.unionByName(norm.where(sliceEnd > wmOld))
-      .localCheckpoint(true)
-    // the watermark is a pointer-file fact, so the 1-row max is an
-    // inherent bounded driver fetch (O(1), not a hot-path collect)
-    val maxTs = rows.agg(max(col("__ts"))).head.get(0)
-    val wm =
-      if (maxTs == null) wmOld
-      else math.max(wmOld, maxTs.asInstanceOf[Long] - delaySeconds)
-    val closing = rows.where(sliceEnd <= wm)
-    val staying = rows.where(sliceEnd > wm)
-    val newClosed = TimeSeries.deltaSumState(
-      closing, keys :+ "__slice",
-      ord = Seq(col("__ts"), col("__tie")), ts = col("__ts"),
-      value = col("__v"))
-    val closed =
-      if (curVer == 0L) newClosed
-      else readDir(spark, s"$stateDir/state-$curVer/closed")
-        .unionByName(newClosed)
-    val next = curVer + 1
-    // Overwrite: a crash between the two writes and the pointer move
-    // leaves orphan dirs the replay must be able to rewrite
-    closed.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/state-$next/closed")
-    staying.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/state-$next/pending")
-    writePointer(stateDir, next, batchId, wm)
-    for (old <- 1L until (next - 1L)) {
-      val dir = Paths.get(stateDir, s"state-$old")
-      if (Files.isDirectory(dir)) {
-        StateStore.deleteTree(dir)
-      }
+    StateStore.commit(stateDir, batchId, initial = Initial) { (cur, next) =>
+      val (curVer, wmOld) = (cur.version, cur.payload(0))
+      val norm = normalize(batch, keys, ts, tie, value, sliceSeconds)
+      val pending =
+        if (curVer == 0L) spark.createDataFrame(
+          java.util.Collections.emptyList[Row](), norm.schema)
+        else readDir(spark, s"$stateDir/state-$curVer/pending")
+      // late-beyond-watermark rows target an already-closed slice and
+      // must be dropped — folding them would break slice disjointness
+      val sliceEnd = (col("__slice") + 1) * sliceSeconds
+      val rows = pending.unionByName(norm.where(sliceEnd > wmOld))
+        .localCheckpoint(true)
+      // the watermark is a pointer-file fact, so the 1-row max is an
+      // inherent bounded driver fetch (O(1), not a hot-path collect)
+      val maxTs = rows.agg(max(col("__ts"))).head.get(0)
+      val wm =
+        if (maxTs == null) wmOld
+        else math.max(wmOld, maxTs.asInstanceOf[Long] - delaySeconds)
+      val closing = rows.where(sliceEnd <= wm)
+      val staying = rows.where(sliceEnd > wm)
+      val newClosed = TimeSeries.deltaSumState(
+        closing, keys :+ "__slice",
+        ord = Seq(col("__ts"), col("__tie")), ts = col("__ts"),
+        value = col("__v"))
+      val closed =
+        if (curVer == 0L) newClosed
+        else readDir(spark, s"$stateDir/state-$curVer/closed")
+          .unionByName(newClosed)
+      // Overwrite: a crash between the two writes and the pointer move
+      // leaves orphan dirs the replay must be able to rewrite
+      closed.write.mode(SaveMode.Overwrite)
+        .parquet(s"$stateDir/state-$next/closed")
+      staying.write.mode(SaveMode.Overwrite)
+        .parquet(s"$stateDir/state-$next/pending")
+      Seq(wm)
     }
   }
 
@@ -176,7 +154,7 @@ object StreamingDeltaSum {
     * merged row is itself a state, disjoint from and below every
     * future slice). The read face is invariant under compaction
     * (spec law); the closed table stops growing with stream age.
-    * Committed as a new version under the same pointer protocol.
+    * Published as a new version under the same pointer protocol.
     */
   def compactClosed(spark: SparkSession, stateDir: String,
       keys: Seq[String]): Unit = {
@@ -193,20 +171,6 @@ object StreamingDeltaSum {
       .mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next/closed")
     readDir(spark, s"$stateDir/state-$v/pending").write
       .mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next/pending")
-    writePointer(stateDir, next, batchId, wm)
+    StateStore.publish(stateDir, StateStore.Pointer(next, batchId, Seq(wm)))
   }
-
-  /** The streaming sink via foreachBatch — exactly-once counter-state
-    * maintenance with the commit-pointer protocol.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], ts: Column,
-      tie: Column, value: Column, sliceSeconds: Long, delaySeconds: Long,
-      stateDir: String, checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, ts, tie, value, sliceSeconds,
-          delaySeconds, stateDir, batchId)
-      }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST17: streaming EXACT-percentile state — a per-key fixed-point
   * value histogram maintained under the store protocol, serving
@@ -20,13 +18,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * fixed-point values per key — the same bound the batch operator's
   * percentile aggregate carries.
   *
-  * Store layout + commit protocol: [[StreamingMatView]]'s exactly —
-  * `state-<version>/` parquet per applied batch, `_CURRENT`
-  * "<version> <batchId>" moved atomically AFTER the state write
-  * (write-then-pointer; a crash between the two leaves an orphan the
-  * replay overwrites), replayed batchIds skipped outright.
-  * SINGLE-WRITER contract as documented on the other stores: one
-  * maintainer per stateDir; readers are safe at any point.
+  * State is one `state-<version>/` histogram per applied batch under
+  * the [[StateStore]] protocol. SINGLE-WRITER contract as documented
+  * on the other stores: one maintainer per stateDir; readers are
+  * safe at any point.
   *
   * Read faces score through the SAME expression trees as the batch
   * operators ([[percentileOf]] reproduces Spark `percentile`'s
@@ -38,9 +33,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingHistogram {
 
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
+  import StateStore.readVersioned
 
   /** One batch's histogram partial: (keys, __w, cnt). Null/NaN values
     * drop (the madZScore filter).
@@ -56,34 +49,15 @@ object StreamingHistogram {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** The committed histogram (keys, __w, cnt); empty-safe. */
-  def histogram(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
-  /** Fold ONE batch into the store; replays are no-ops. */
+  /** Fold ONE batch into the store; replays are no-ops. The
+    * committed histogram (keys, __w, cnt) is read back through
+    * [[StateStore.readVersioned]].
+    */
   def applyBatch(batch: DataFrame, keys: Seq[String], value: Column,
-      stateDir: String, batchId: Long, scale: Int = 2): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val p = partial(batch, keys, value, scale)
-      val merged = histogram(spark, stateDir, p).unionByName(p)
-        .groupBy((keys.map(col) :+ col("__w")): _*)
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: applyBatch inside foreachBatch. */
-  def maintain(stream: DataFrame, keys: Seq[String], value: Column,
-      stateDir: String, checkpoint: String,
-      scale: Int = 2): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, value, stateDir, batchId, scale)
-      }
+      stateDir: String, batchId: Long, scale: Int = 2): Unit =
+    StateStore.fold(stateDir, batchId, partial(batch, keys, value, scale))(
+      _.groupBy((keys.map(col) :+ col("__w")): _*)
+        .agg(sum(col("cnt")).cast("long").as("cnt")))
 
   /** Exact interpolated percentile per key over a (keys, __w, cnt)
     * histogram — Spark `percentile` semantics reconstructed from
@@ -149,7 +123,7 @@ object StreamingHistogram {
       scale: Int = 2): DataFrame = {
     require(lo < hi, "lo fence must be below hi")
     val factor = math.pow(10.0, scale)
-    val h = histogram(spark, stateDir, template)
+    val h = readVersioned(spark, stateDir, template)
       .select((keys.map(col) :+
         (col("__w").cast("double") / lit(factor)).as("__w")) :+
         col("cnt"): _*)
@@ -200,7 +174,7 @@ object StreamingHistogram {
     */
   def robustStats(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame = {
-    val h = histogram(spark, stateDir, template)
+    val h = readVersioned(spark, stateDir, template)
     val med = percentileOf(h, keys, 0.5)
       .withColumnRenamed("pct", "__med")
     val dev = h.join(broadcast(med), keys)
@@ -232,7 +206,7 @@ object StreamingHistogram {
       bins: Int, scale: Int = 2): DataFrame = {
     require(bins >= 2 && bins <= 10000, s"bins out of range: $bins")
     val template = partial(reference.limit(0), keys, value, scale)
-    val cur = histogram(spark, stateDir, template)
+    val cur = readVersioned(spark, stateDir, template)
       .withColumn("__ref", lit(false))
     val ref = partial(reference, keys, value, scale)
       .withColumn("__ref", lit(true))

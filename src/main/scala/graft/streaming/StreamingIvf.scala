@@ -1,16 +1,14 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST15: streaming maintenance of the X3e persisted IVF index — the
   * vector-tier sibling of [[StreamingPostings]] (ST14): keep
   * [[graft.operators.Similarity.buildIvfIndex]]'s cell-partitioned
   * corpus fresh as vectors stream in, under the same exactly-once
-  * write-then-pointer protocol every graft streaming store rides.
+  * [[StateStore]] protocol every graft streaming store rides.
   *
   * Layout under `storeDir`:
   *   centroids-<cv>/        the FROZEN codebook, version cv — trained
@@ -23,14 +21,13 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   cells/base-<through>-<centVer>/cell=N/   the compacted form
   *       ([[compact]]/[[retrain]]) — centVer in the name keeps every
   *       rewrite version-distinct from the dirs it reads
-  *   _CURRENT   "<version> <batchId> <nCorpus> <compactedThrough> <centVer>"
+  *   pointer payload  (nCorpus, compactedThrough, centVer)
   *
-  * Commit protocol: write the batch's cell dirs (and, on the first
-  * batch, the codebook) FULLY, THEN atomically move the pointer. A
-  * crash in between leaves orphans and the OLD pointer; the replayed
-  * batch rewrites both (mode overwrite — training is deterministic, so
-  * even a half-written codebook heals to identical bytes) and readers
-  * never see uncommitted dirs.
+  * A commit writes the batch's cell dirs (and, on the first batch,
+  * the codebook) before the pointer moves; the replay after a crash
+  * rewrites both (training is deterministic, so even a half-written
+  * codebook heals to identical bytes) and readers never see
+  * uncommitted dirs.
   *
   * Query face [[ivfTopKFromStore]]: the IDENTICAL assignment and
   * score trees as `ivfTopKIndexed` over the committed cell dirs —
@@ -64,28 +61,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingIvf {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_CURRENT")
+  private val Initial = Seq(0L, -1L, 0L)
 
   /** (version, lastBatchId, nCorpus, compactedThrough, centroidVer);
     * (0, -1, 0, -1, 0) initially.
     */
   def readPointer(storeDir: String): (Long, Long, Long, Long, Long) = {
-    val p = pointerPath(storeDir)
-    if (!Files.exists(p)) (0L, -1L, 0L, -1L, 0L)
-    else {
-      val parts = Files.readString(p).trim.split(" ")
-      (parts(0).toLong, parts(1).toLong, parts(2).toLong, parts(3).toLong,
-        parts(4).toLong)
-    }
-  }
-
-  private def writePointer(storeDir: String, version: Long, batchId: Long,
-      nCorpus: Long, compactedThrough: Long, centVer: Long): Unit = {
-    val tmp = Paths.get(storeDir, "_CURRENT.tmp")
-    Files.writeString(tmp,
-      s"$version $batchId $nCorpus $compactedThrough $centVer")
-    Files.move(tmp, pointerPath(storeDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val p = StateStore.pointer(storeDir, Initial)
+    (p.version, p.batchId, p.payload(0), p.payload(1), p.payload(2))
   }
 
   /** Committed cell directories under a pointer SNAPSHOT — the
@@ -109,8 +92,7 @@ object StreamingIvf {
           s"base-$compactedThrough-$centVer").getPath)
       val batches = root.listFiles().toSeq
         .filter { d =>
-          d.isDirectory && d.getName.startsWith("batch-") &&
-          d.getName.stripPrefix("batch-").toLongOption
+          d.isDirectory && StateStore.versionOf(d.getName, "batch-")
             .exists(b => b > compactedThrough && b <= lastBatch)
         }
         .map(_.getPath).sorted
@@ -132,35 +114,32 @@ object StreamingIvf {
     */
   def applyBatch(batch: DataFrame, id: String, vec: String,
       storeDir: String, batchId: Long, nlist: Int = 0,
-      iters: Int = 2): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(storeDir))
-    val (curVer, lastBatch, nCorpus, compactedThrough, centVer) =
-      readPointer(storeDir)
-    if (batchId <= lastBatch) return
-    val cv =
-      if (centVer > 0L) centVer
-      else {
-        val n = batch.count()
-        val nl =
-          if (nlist > 0) nlist else Similarity.ivfConfigFor(n)._1
-        val cents =
-          if (iters <= 0) // deterministic md5-rank sample, oracle-able
-            Similarity.trainCentroids(batch, id, vec, nl, 0, n)
-          else Similarity.trainCentroids(batch, id, vec, nl, iters, n)
-        cents.write.mode(SaveMode.Overwrite)
-          .parquet(s"$storeDir/centroids-1")
-        1L
-      }
-    val cents = broadcast(centroids(spark, storeDir, cv))
-    Similarity.assignCells(batch, id, vec, cents,
-        "neighbor_id", "cv", keep = 1)
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$storeDir/cells/batch-$batchId")
-    writePointer(storeDir, curVer + 1, batchId,
-      nCorpus + batch.count(), compactedThrough, cv)
-  }
+      iters: Int = 2): Unit =
+    StateStore.commit(storeDir, batchId, initial = Initial) { (cur, _) =>
+      val Seq(nCorpus, compactedThrough, centVer) = cur.payload
+      val spark = batch.sparkSession
+      val cv =
+        if (centVer > 0L) centVer
+        else {
+          val n = batch.count()
+          val nl =
+            if (nlist > 0) nlist else Similarity.ivfConfigFor(n)._1
+          val cents =
+            if (iters <= 0) // deterministic md5-rank sample, oracle-able
+              Similarity.trainCentroids(batch, id, vec, nl, 0, n)
+            else Similarity.trainCentroids(batch, id, vec, nl, iters, n)
+          cents.write.mode(SaveMode.Overwrite)
+            .parquet(s"$storeDir/centroids-1")
+          1L
+        }
+      val cents = broadcast(centroids(spark, storeDir, cv))
+      Similarity.assignCells(batch, id, vec, cents,
+          "neighbor_id", "cv", keep = 1)
+        .repartition(col("cell"))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell")
+        .parquet(s"$storeDir/cells/batch-$batchId")
+      Seq(nCorpus + batch.count(), compactedThrough, cv)
+    }
 
   /** Retrieval against the streamed store — the `ivfTopKIndexed`
     * plan over committed cell dirs: broadcast codebook assignment of
@@ -232,7 +211,8 @@ object StreamingIvf {
         .repartition(col("cell"))
         .write.mode(SaveMode.Overwrite).partitionBy("cell")
         .parquet(s"$storeDir/cells/base-$lastBatch-$centVer")
-      writePointer(storeDir, ver, lastBatch, nCorpus, lastBatch, centVer)
+      StateStore.publish(storeDir, StateStore.Pointer(ver, lastBatch,
+        Seq(nCorpus, lastBatch, centVer)))
     }
     sweep(storeDir)
   }
@@ -270,7 +250,8 @@ object StreamingIvf {
       .repartition(col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .parquet(s"$storeDir/cells/base-$lastBatch-$newCv")
-    writePointer(storeDir, ver + 1, lastBatch, nCorpus, lastBatch, newCv)
+    StateStore.publish(storeDir, StateStore.Pointer(ver + 1, lastBatch,
+      Seq(nCorpus, lastBatch, newCv)))
     sweep(storeDir)
   }
 
@@ -280,49 +261,22 @@ object StreamingIvf {
     */
   private def sweep(storeDir: String): Unit = {
     val (_, _, _, through, centVer) = readPointer(storeDir)
-    val root = new java.io.File(storeDir, "cells")
-    if (root.isDirectory && through >= 0)
-      root.listFiles().toSeq.filter { d =>
-        d.isDirectory && (
-          (d.getName.startsWith("batch-") &&
-            d.getName.stripPrefix("batch-").toLongOption
-              .exists(_ <= through)) ||
-          (d.getName.startsWith("base-") && {
+    if (through >= 0)
+      StateStore.sweep(s"$storeDir/cells") { name =>
+        StateStore.versionOf(name, "batch-").exists(_ <= through) ||
+          (name.startsWith("base-") && {
             // base-<through>-<centVer>: superseded when its watermark
             // is behind the pointer's, or same watermark under an
             // OLD codebook version (a completed retrain's input base)
-            val parts = d.getName.stripPrefix("base-").split("-")
+            val parts = name.stripPrefix("base-").split("-")
             val t = parts.headOption.flatMap(_.toLongOption)
             val c = parts.lift(1).flatMap(_.toLongOption)
             t.exists(tv => tv < through ||
               (tv == through && !c.contains(centVer)))
-          }))
-      }.foreach { d =>
-        StateStore.deleteTree(d.toPath)
+          })
       }
-    val top = new java.io.File(storeDir)
-    if (top.isDirectory)
-      top.listFiles().toSeq.filter { d =>
-        d.isDirectory && d.getName.startsWith("centroids-") &&
-        d.getName.stripPrefix("centroids-").toLongOption
-          .exists(_ < centVer)
-      }.foreach { d =>
-        StateStore.deleteTree(d.toPath)
-      }
+    StateStore.sweep(storeDir)(
+      StateStore.versionOf(_, "centroids-").exists(_ < centVer))
   }
 
-  /** The streaming sink: exactly-once per micro-batch via
-    * foreachBatch; [[ivfTopKFromStore]] between batches equals a
-    * batch index built with the store's codebook over everything
-    * ingested so far.
-    */
-  def maintain(stream: DataFrame, id: String, vec: String,
-      storeDir: String, checkpoint: String, nlist: Int = 0,
-      iters: Int = 2): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, id, vec, storeDir, batchId, nlist, iters)
-      }
 }

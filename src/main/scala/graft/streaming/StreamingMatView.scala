@@ -1,9 +1,7 @@
 package graft.streaming
 
 import graft.operators.MatView
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Streaming maintenance of a [[MatView]] aggregate state — the
   * ingest half of the Summing/AggregatingMergeTree semantics: every
@@ -11,73 +9,33 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * get [[currentState]] — exactly the aggregate over ALL rows ever
   * ingested, at any point between batches.
   *
-  * Store layout under `stateDir`:
-  *
-  *   state-<version>/   one parquet state table per applied batch
-  *   _CURRENT           "<version> <batchId>" — the commit pointer
-  *
-  * Commit protocol (exactly-once state, not just at-least-once):
-  * write `state-<v+1>` fully, THEN atomically move the pointer. A
-  * crash between the two leaves an orphan version directory and the
-  * OLD pointer — the replayed batch re-merges from the old state and
-  * overwrites the orphan, so no batch is ever double-counted (the
-  * failure mode a plain "append partials, aggregate at read" store
-  * has under replay). A batchId at or below the pointer's is a replay
-  * of committed work and is skipped outright — the idempotence arm
-  * the spec exercises.
+  * State is one `state-<version>/` parquet table per applied batch
+  * under the [[StateStore]] commit protocol (exactly-once state, not
+  * just at-least-once): a crash mid-commit is healed by the replayed
+  * batch re-merging from the old state, so no batch is ever
+  * double-counted — the failure mode a plain "append partials,
+  * aggregate at read" store has under replay.
   *
   * Scale shape: the merge reads |keys| state rows + one batch's
   * partials — never historical raw data; the state write is one
-  * key-partitioned aggregate of state-row-count size. Old versions
-  * are pruned to the last two (current + crash-window predecessor).
+  * key-partitioned aggregate of state-row-count size.
   */
 object StreamingMatView {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
-
-  /** The committed state table (raw, mergeable). Empty-safe: an
-    * empty frame with the right schema before the first commit.
-    */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
 
   /** The read face at the current commit point. */
   def currentState(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    MatView.finalizeState(readState(spark, stateDir, template), keys)
+    MatView.finalizeState(
+      StateStore.readVersioned(spark, stateDir, template), keys)
 
   /** Fold ONE ingest batch into the store. Pure function of
     * (committed state, batch, batchId) — unit-testable without a
-    * stream; [[maintain]] is just this inside foreachBatch. Replays
-    * (batchId <= pointer's) are no-ops.
+    * stream; [[StateStore.maintain]] runs it inside foreachBatch.
+    * Replays (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], value: Column,
-      distinctOn: Column, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = MatView.partialState(batch, keys, value, distinctOn)
-      val cur = readState(spark, stateDir, partial)
-      val merged = MatView.mergeStates(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: attach to `stream.writeStream` semantics via
-    * foreachBatch. Each micro-batch commits exactly once (see the
-    * protocol above); `currentState` between batches equals the batch
-    * aggregate over everything ingested so far — the parity the
-    * streaming spec asserts, replay included.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], value: Column,
-      distinctOn: Column, stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, value, distinctOn, stateDir, batchId)
-      }
+      distinctOn: Column, stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      MatView.partialState(batch, keys, value, distinctOn))(
+      MatView.mergeStates(_, keys))
 }

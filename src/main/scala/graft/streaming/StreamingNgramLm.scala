@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.operators.Curation
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST16: streaming maintenance of the X13d Kneser–Ney trigram model —
   * keep the corpus-internal LM fresh as documents stream in, so
@@ -19,14 +17,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * state is the merged count table — the [[StreamingMatView]] merge
   * shape, exactly like [[StreamingPostings]]' df state.
   *
-  * Layout under `storeDir`:
-  *   state-<version>/   (w1, w2, w3, c3) — the summable trigram counts
-  *   _CURRENT           "<version> <batchId> <nDocs>"
-  *
-  * Commit protocol: write `state-<v+1>` FULLY, THEN atomically move
-  * the pointer (crash ⇒ old pointer + an orphan the replay
-  * overwrites); replays at or below the committed batchId are
-  * no-ops. SINGLE WRITER, like every graft streaming store
+  * State is one `state-<version>/` table of summable trigram counts
+  * (w1, w2, w3, c3) per applied batch under the [[StateStore]]
+  * protocol, with the ingested document count as the pointer's one
+  * payload field. SINGLE WRITER, like every graft streaming store
   * (foreachBatch is naturally serial).
   *
   * Query face [[knScoreFromStore]]: scores any document batch through
@@ -42,24 +36,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingNgramLm {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_CURRENT")
+  private val Initial = Seq(0L)
 
   /** (version, lastBatchId, nDocs); (0, -1, 0) initially. */
   def readPointer(storeDir: String): (Long, Long, Long) = {
-    val p = pointerPath(storeDir)
-    if (!Files.exists(p)) (0L, -1L, 0L)
-    else {
-      val parts = Files.readString(p).trim.split(" ")
-      (parts(0).toLong, parts(1).toLong, parts(2).toLong)
-    }
-  }
-
-  private def writePointer(storeDir: String, version: Long,
-      batchId: Long, nDocs: Long): Unit = {
-    val tmp = Paths.get(storeDir, "_CURRENT.tmp")
-    Files.writeString(tmp, s"$version $batchId $nDocs")
-    Files.move(tmp, pointerPath(storeDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val p = StateStore.pointer(storeDir, Initial)
+    (p.version, p.batchId, p.payload(0))
   }
 
   /** Fold ONE document batch (id, text) into the store — pure
@@ -69,33 +51,19 @@ object StreamingNgramLm {
     * corpus-sized is rescanned.
     */
   def applyBatch(batch: DataFrame, id: String, text: Column,
-      storeDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(storeDir))
-    val (curVer, lastBatch, nDocs) = readPointer(storeDir)
-    if (batchId <= lastBatch) return
-    val batchCounts = Curation.knTrigrams(batch, id, text)
-      .groupBy("w1", "w2", "w3")
-      .agg(count(lit(1)).cast("double").as("c3"))
-    val cur =
-      if (curVer == 0L) spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), batchCounts.schema)
-      else spark.read.parquet(s"$storeDir/state-$curVer")
-    // c3 values are integer-valued doubles — sums exact in any order
-    val merged = cur.unionByName(batchCounts)
-      .groupBy("w1", "w2", "w3")
-      .agg(sum(col("c3")).as("c3"))
-    val next = curVer + 1
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/state-$next")
-    writePointer(storeDir, next, batchId, nDocs + batch.count())
-    // gc superseded states (keep the previous one as the crash floor,
-    // the StreamingPostings discipline)
-    for (old <- 1L until (next - 1L)) {
-      val d = Paths.get(storeDir, s"state-$old")
-      if (Files.isDirectory(d))
-        StateStore.deleteTree(d)
+      storeDir: String, batchId: Long): Unit =
+    StateStore.commit(storeDir, batchId, initial = Initial) { (cur, next) =>
+      val batchCounts = Curation.knTrigrams(batch, id, text)
+        .groupBy("w1", "w2", "w3")
+        .agg(count(lit(1)).cast("double").as("c3"))
+      // c3 values are integer-valued doubles — sums exact in any order
+      StateStore.readVersioned(batch.sparkSession, storeDir, batchCounts)
+        .unionByName(batchCounts)
+        .groupBy("w1", "w2", "w3")
+        .agg(sum(col("c3")).as("c3"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$storeDir/state-$next")
+      Seq(cur.payload(0) + batch.count())
     }
-  }
 
   /** Score a document batch against the store's model — the shared
     * KN stages over the committed counts; bit-equal to the batch
@@ -116,16 +84,4 @@ object StreamingNgramLm {
     Curation.knScoreDocs(tris, Curation.knModelLogProbs(t3, discount), id)
   }
 
-  /** The streaming sink: exactly-once per micro-batch via
-    * foreachBatch; [[knScoreFromStore]] between batches equals the
-    * batch KN score over everything ingested so far.
-    */
-  def maintain(stream: DataFrame, id: String, text: Column,
-      storeDir: String, checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, id, text, storeDir, batchId)
-      }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming maintenance of the W9 OHLC bars table
   * ([[graft.operators.TimeSeries.ohlcResample]]) — the live
@@ -27,18 +25,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * as `min_by(value, struct(t, tie))` because (t, tie) totally
   * orders rows within a group — the W1 tiebreak discipline.
   *
-  * Store layout + commit protocol are [[StreamingMatView]]'s:
-  * `state-<version>/` tables under an atomically-moved `_CURRENT`
-  * pointer; replayed batchIds are no-ops, crash orphans are
-  * overwritten. Scale shape per batch: one partial aggregate of the
-  * batch (map-side combine) + a merge over |bars| state rows —
-  * never raw history.
+  * State is one `state-<version>/` bar table per applied batch under
+  * the [[StateStore]] commit protocol. Scale shape per batch: one
+  * partial aggregate of the batch (map-side combine) + a merge over
+  * |bars| state rows — never raw history.
   */
 object StreamingOhlc {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   /** One mergeable bar-state row per (keys, bucket) over a slice. */
   def partialBars(df: DataFrame, keys: Seq[String], ts: Column,
@@ -76,37 +68,13 @@ object StreamingOhlc {
       col("open_s.v").as("open"), col("high"), col("low"),
       col("close_s.v").as("close"), col("n"))): _*)
 
-  /** The committed state table (raw, mergeable); empty-safe. */
-  def readBars(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** Fold ONE micro-batch of rows into the bars store; replays
     * (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], ts: Column,
       tie: Column, value: Column, bucketSeconds: Long,
-      stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = partialBars(batch, keys, ts, tie, value, bucketSeconds)
-      val cur = readBars(spark, stateDir, partial)
-      val merged = mergeBars(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink via foreachBatch — exactly-once bar
-    * maintenance with the commit-pointer protocol.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], ts: Column,
-      tie: Column, value: Column, bucketSeconds: Long,
-      stateDir: String, checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, ts, tie, value, bucketSeconds,
-          stateDir, batchId)
-      }
+      stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      partialBars(batch, keys, ts, tie, value, bucketSeconds))(
+      mergeBars(_, keys))
 }

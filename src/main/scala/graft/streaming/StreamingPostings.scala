@@ -1,16 +1,14 @@
 package graft.streaming
 
 import graft.operators.Retrieval
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST14: streaming maintenance of the X19e BM25 postings index —
   * the "index stays fresh as the corpus streams in" face of
   * [[graft.operators.Retrieval.buildPostingsIndex]]'s
   * build-once/retrieve-many trade, under the exactly-once
-  * write-then-pointer protocol every graft streaming store rides.
+  * [[StateStore]] protocol every graft streaming store rides.
   *
   * Why the batch layout can't just be appended: the batch index
   * DENORMALIZES df onto each posting row, and a new document changes
@@ -24,16 +22,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   state-<version>/            the SUMMABLE side: per-term df
   *       (tok, dfc) — df is a plain sum over batches, the
   *       StreamingMatView merge shape;
-  *   _CURRENT   "<version> <batchId> <nDocs> <sumDl> <compactedThrough>"
-  *       — the commit pointer; corpus stats ride it as exact longs
-  *       (sumDl exact ⇒ avgdl identical to the batch arm's `avg`).
+  *   pointer payload  (nDocs, sumDl, compactedThrough) — corpus
+  *       stats ride the commit pointer as exact longs (sumDl exact ⇒
+  *       avgdl identical to the batch arm's `avg`).
   *
-  * Commit protocol: write `postings/batch-<b>` and `state-<v+1>`
-  * fully, THEN atomically move the pointer. A crash in between
-  * leaves orphans and the OLD pointer — the replayed batch rewrites
-  * both (mode overwrite) and readers never see uncommitted batch
-  * dirs (they list `postings/batch-*` only up to the pointer's
-  * batchId). Replays at or below the pointer are skipped outright.
+  * A commit writes `postings/batch-<b>` and `state-<v+1>` before the
+  * pointer moves; a crash in between leaves orphans the replayed
+  * batch rewrites, and readers never see uncommitted batch dirs
+  * (they list `postings/batch-*` only up to the pointer's batchId).
   *
   * Query face [[bm25TopKFromStore]]: the IDENTICAL score tree to
   * `bm25JoinTopK`/`bm25JoinTopKIndexed` over (pruned postings ⋈
@@ -54,7 +50,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingPostings {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_CURRENT")
+  private val Initial = Seq(0L, 0L, -1L)
 
   /** (version, lastBatchId, nDocs, sumDl, compactedThrough);
     * (0, -1, 0, 0, -1) initially. `compactedThrough` >= 0 means
@@ -62,22 +58,8 @@ object StreamingPostings {
     * and per-batch dirs at or below it are post-commit garbage.
     */
   def readPointer(storeDir: String): (Long, Long, Long, Long, Long) = {
-    val p = pointerPath(storeDir)
-    if (!Files.exists(p)) (0L, -1L, 0L, 0L, -1L)
-    else {
-      val parts = Files.readString(p).trim.split(" ")
-      (parts(0).toLong, parts(1).toLong, parts(2).toLong, parts(3).toLong,
-        parts(4).toLong)
-    }
-  }
-
-  private def writePointer(storeDir: String, version: Long, batchId: Long,
-      nDocs: Long, sumDl: Long, compactedThrough: Long): Unit = {
-    val tmp = Paths.get(storeDir, "_CURRENT.tmp")
-    Files.writeString(tmp,
-      s"$version $batchId $nDocs $sumDl $compactedThrough")
-    Files.move(tmp, pointerPath(storeDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val p = StateStore.pointer(storeDir, Initial)
+    (p.version, p.batchId, p.payload(0), p.payload(1), p.payload(2))
   }
 
   /** Committed posting directories under a pointer SNAPSHOT: the
@@ -101,8 +83,7 @@ object StreamingPostings {
         else Seq(new java.io.File(root, s"base-$compactedThrough").getPath)
       val batches = root.listFiles().toSeq
         .filter { d =>
-          d.isDirectory && d.getName.startsWith("batch-") &&
-          d.getName.stripPrefix("batch-").toLongOption
+          d.isDirectory && StateStore.versionOf(d.getName, "batch-")
             .exists(b => b > compactedThrough && b <= lastBatch)
         }
         .map(_.getPath).sorted
@@ -116,47 +97,34 @@ object StreamingPostings {
     * most one batch (the CDC-dedup stores upstream own mutation).
     */
   def applyBatch(batch: DataFrame, corpusId: String, text: Column,
-      storeDir: String, batchId: Long, nBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(storeDir))
-    val (curVer, lastBatch, nDocs, sumDl, compactedThrough) =
-      readPointer(storeDir)
-    if (batchId <= lastBatch) return
-    val toks = batch.select(col(corpusId).as("__did"),
-      explode(split(text, " ")).as("tok"))
-    val dl = batch.select(col(corpusId).as("__did"),
-      size(split(text, " ")).cast("double").as("dl"))
-    val tf = toks.groupBy(col("__did"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    tf.join(dl, "__did")
-      .withColumn("pb", pmod(xxhash64(col("tok")), lit(nBuckets.toLong)))
-      .repartition(col("pb"))
-      .sortWithinPartitions(col("tok"), col("__did"))
-      .write.mode(SaveMode.Overwrite).partitionBy("pb")
-      .parquet(s"$storeDir/postings/batch-$batchId")
-    // df is summable: committed state + this batch's per-term df
-    val dfBatch = tf.groupBy(col("tok"))
-      .agg(count(lit(1)).cast("double").as("dfc"))
-    val cur =
-      if (curVer == 0L) spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), dfBatch.schema)
-      else spark.read.parquet(s"$storeDir/state-$curVer")
-    val merged = cur.unionByName(dfBatch)
-      .groupBy(col("tok")).agg(sum(col("dfc")).as("dfc"))
-    val next = curVer + 1
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/state-$next")
-    val batchStats = dl.agg(count(lit(1)), sum(col("dl"))).head
-    writePointer(storeDir, next, batchId,
-      nDocs + batchStats.getLong(0),
-      sumDl + Option(batchStats.get(1)).map(_
-        .asInstanceOf[Double].toLong).getOrElse(0L),
-      compactedThrough)
-    for (old <- 1L until (next - 1L)) {
-      val d = Paths.get(storeDir, s"state-$old")
-      if (Files.isDirectory(d))
-        StateStore.deleteTree(d)
+      storeDir: String, batchId: Long, nBuckets: Int = 64): Unit =
+    StateStore.commit(storeDir, batchId, initial = Initial) { (cur, next) =>
+      val Seq(nDocs, sumDl, compactedThrough) = cur.payload
+      val toks = batch.select(col(corpusId).as("__did"),
+        explode(split(text, " ")).as("tok"))
+      val dl = batch.select(col(corpusId).as("__did"),
+        size(split(text, " ")).cast("double").as("dl"))
+      val tf = toks.groupBy(col("__did"), col("tok"))
+        .agg(count(lit(1)).cast("double").as("tf"))
+      tf.join(dl, "__did")
+        .withColumn("pb", pmod(xxhash64(col("tok")), lit(nBuckets.toLong)))
+        .repartition(col("pb"))
+        .sortWithinPartitions(col("tok"), col("__did"))
+        .write.mode(SaveMode.Overwrite).partitionBy("pb")
+        .parquet(s"$storeDir/postings/batch-$batchId")
+      // df is summable: committed state + this batch's per-term df
+      val dfBatch = tf.groupBy(col("tok"))
+        .agg(count(lit(1)).cast("double").as("dfc"))
+      StateStore.readVersioned(batch.sparkSession, storeDir, dfBatch)
+        .unionByName(dfBatch)
+        .groupBy(col("tok")).agg(sum(col("dfc")).as("dfc"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$storeDir/state-$next")
+      val batchStats = dl.agg(count(lit(1)), sum(col("dl"))).head
+      Seq(nDocs + batchStats.getLong(0),
+        sumDl + Option(batchStats.get(1)).map(_
+          .asInstanceOf[Double].toLong).getOrElse(0L),
+        compactedThrough)
     }
-  }
 
   /** Fold the committed posting dirs into ONE compacted base
     * (keeping the term-hash partitioning), so the per-retrieval read
@@ -180,24 +148,16 @@ object StreamingPostings {
         .sortWithinPartitions(col("tok"), col("__did"))
         .write.mode(SaveMode.Overwrite).partitionBy("pb")
         .parquet(s"$storeDir/postings/base-$lastBatch")
-      writePointer(storeDir, ver, lastBatch, nDocs, sumDl, lastBatch)
+      StateStore.publish(storeDir, StateStore.Pointer(ver, lastBatch,
+        Seq(nDocs, sumDl, lastBatch)))
     }
     // post-commit cleanup (also sweeps leftovers of crashed cleanups);
     // the watermark is lastBatch if we just compacted, else unchanged
     val through = if (dirs.size > 1) lastBatch else compactedThrough
-    val root = new java.io.File(storeDir, "postings")
-    if (root.isDirectory && through >= 0)
-      root.listFiles().toSeq.filter { d =>
-        d.isDirectory && (
-          (d.getName.startsWith("batch-") &&
-            d.getName.stripPrefix("batch-").toLongOption
-              .exists(_ <= through)) ||
-          (d.getName.startsWith("base-") &&
-            d.getName.stripPrefix("base-").toLongOption
-              .exists(_ < through)))
-      }.foreach { d =>
-        StateStore.deleteTree(d.toPath)
-      }
+    if (through >= 0)
+      StateStore.sweep(s"$storeDir/postings")(name =>
+        StateStore.versionOf(name, "batch-").exists(_ <= through) ||
+          StateStore.versionOf(name, "base-").exists(_ < through))
   }
 
   /** Retrieval against the streamed store — the bm25JoinTopK score
@@ -269,17 +229,4 @@ object StreamingPostings {
         col("score"), col("n_terms"), col("__rk").as("rnk"))
   }
 
-  /** The streaming sink: exactly-once per micro-batch via
-    * foreachBatch; [[bm25TopKFromStore]] between batches equals a
-    * batch `bm25JoinTopK` over everything ingested so far.
-    */
-  def maintain(stream: DataFrame, corpusId: String, text: Column,
-      storeDir: String, checkpoint: String,
-      nBuckets: Int = 64): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, corpusId, text, storeDir, batchId, nBuckets)
-      }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
 import graft.operators.Regression
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** ST22 — streaming maintenance of A42 regression sufficient
   * statistics: the OLS fit served live. The state is the
@@ -27,53 +24,25 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * reason ClickHouse ships simpleLinearRegression as an
   * AggregateFunction with a mergeable state.
   *
-  * Store layout and commit protocol are the family's verbatim:
-  * `state-<version>/` parquet under an atomically-moved `_CURRENT`
-  * pointer, batchId replay guard, DOWNWARD-walk O(1) cleanup
-  * (crash-self-healing — the round-19 rule).
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol.
   */
 object StreamingRegression {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
-
-  /** The committed state table (raw [[Regression.sums2]] rows). */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
 
   /** Read face: the exact OLS fit at the current commit point —
     * [[Regression.fit2FromSums]] verbatim on the committed sums.
     */
   def currentFit(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    Regression.fit2FromSums(readState(spark, stateDir, template), keys)
+    Regression.fit2FromSums(
+      StateStore.readVersioned(spark, stateDir, template), keys)
 
   /** Fold ONE ingest batch into the store — pure function of
     * (committed state, batch, batchId). Replays are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], x1: Column,
-      x2: Column, y: Column, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = Regression.sums2(batch, keys, x1, x2, y)
-      val cur = readState(spark, stateDir, partial)
-      Regression.mergeSums2(cur.unionByName(partial), keys)
-        .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: exactly-once per micro-batch; the live fit
-    * between batches equals the batch fit over everything ingested.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], x1: Column,
-      x2: Column, y: Column, stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, x1, x2, y, stateDir, batchId)
-      }
+      x2: Column, y: Column, stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      Regression.sums2(batch, keys, x1, x2, y))(
+      Regression.mergeSums2(_, keys))
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import graft.operators.VersionedDedup
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** ST13: streaming maintenance of the W1c SCD Type-2 history — the
   * warehouse table a CDC feed like the reference's
@@ -23,17 +22,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *                             a delete, with the delete's version —
   *                             the at-least-once guard's memory for
   *                             keys the open table can't see
-  *   _CURRENT                  "<version> <batchId>" commit pointer
   *
   * Per batch: only the AFFECTED keys' open rows are re-derived — the
   * open row re-enters [[VersionedDedup.scd2History]] as a change row
   * alongside the batch's changes, so a new change closes it with
   * exactly the batch operator's semantics; every other key's open row
   * is carried over untouched, and closed history is never read, let
-  * alone rewritten. Exactly-once via the StreamingMatView commit
-  * protocol: write `closed/delta-<v+1>` and `open-<v+1>` fully, THEN
-  * atomically move the pointer; a replayed batchId ≤ pointer is a
-  * no-op, and a crash between the writes leaves orphans the replay
+  * alone rewritten. Exactly-once via the [[StateStore]] protocol:
+  * `closed/delta-<v+1>`, `open-<v+1>` and `tomb-<v+1>` are written
+  * before the pointer moves, so a crash leaves orphans the replay
   * overwrites (same version names).
   *
   * Contract: per-key versions are STRICTLY increasing for new
@@ -58,25 +55,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingScd2 {
 
-  private def pointerPath(stateDir: String) = Paths.get(stateDir, "_CURRENT")
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) = {
-    val p = pointerPath(stateDir)
-    if (!Files.exists(p)) (0L, -1L)
-    else {
-      val parts = Files.readString(p).trim.split(" ")
-      (parts(0).toLong, parts(1).toLong)
-    }
-  }
-
-  private def writePointer(stateDir: String, version: Long,
-      batchId: Long): Unit = {
-    val tmp = Paths.get(stateDir, "_CURRENT.tmp")
-    Files.writeString(tmp, s"$version $batchId")
-    Files.move(tmp, pointerPath(stateDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  import StateStore.readPointer
 
   private def emptyLike(spark: SparkSession, template: DataFrame): DataFrame =
     spark.createDataFrame(
@@ -84,11 +63,8 @@ object StreamingScd2 {
 
   /** The committed open-interval table (one row per live key). */
   def readOpen(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame = {
-    val (v, _) = readPointer(stateDir)
-    if (v == 0L) emptyLike(spark, template)
-    else spark.read.parquet(s"$stateDir/open-$v")
-  }
+      template: DataFrame): DataFrame =
+    StateStore.readVersioned(spark, stateDir, template, prefix = "open-")
 
   private def basePath(stateDir: String) = Paths.get(stateDir, "closed", "_BASE")
 
@@ -133,15 +109,10 @@ object StreamingScd2 {
     if (v <= prevBase) return
     readClosed(spark, stateDir, template)
       .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/closed/compact-$v")
-    val tmp = Paths.get(stateDir, "closed", "_BASE.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, basePath(stateDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val stale = (1L to v).map(i => Paths.get(stateDir, "closed", s"delta-$i")) ++
-      Seq(prevBase).filter(_ > 0L).map(b => Paths.get(stateDir, "closed", s"compact-$b"))
-    stale.filter(Files.isDirectory(_)).foreach { dir =>
-      StateStore.deleteTree(dir)
-    }
+    StateStore.writeAtomic(basePath(stateDir), v.toString)
+    StateStore.sweep(s"$stateDir/closed")(name =>
+      StateStore.versionOf(name, "delta-").exists(_ <= v) ||
+        StateStore.versionOf(name, "compact-").exists(_ < v))
   }
 
   /** The full SCD2 history at the current commit point — closed
@@ -200,115 +171,94 @@ object StreamingScd2 {
       versionCol: String, tsCol: String, deleteCol: String,
       stateDir: String, batchId: Long,
       redeliveryHorizon: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
     Files.createDirectories(Paths.get(stateDir, "closed"))
-    val (curVer, lastBatch) = readPointer(stateDir)
-    if (batchId <= lastBatch) return
-    val hist = VersionedDedup.scd2History(
-      batch, keys, col(versionCol), col(tsCol).cast("long"),
-      col(deleteCol))
-    val open = readOpen(spark, stateDir, hist)
-    // at-least-once guard: a redelivered change (version ≤ the key's
-    // committed version) would tie the open row in the re-derivation
-    // window — nondeterministic order, a spurious zero-length closed
-    // interval, and a duplicated row — or, for a key whose latest
-    // committed change was a DELETE, resurrect the deleted key. The
-    // open table can't see deleted keys, so deletes leave a TOMBSTONE
-    // (keys + delete version) the guard unions in; only rows STRICTLY
-    // newer than the committed version are new changes, and a key
-    // whose batch rows are all stale stays untouched.
-    val tombTemplate = batch.select(
-      (keys.map(col) :+ col(versionCol)): _*).limit(0)
-    val tombs = readTombs(spark, stateDir, tombTemplate)
-      .localCheckpoint()
-    val openVer = open.select(
-      (keys.map(col) :+ col(versionCol).as("__open_ver")): _*)
-      .unionByName(tombs.select(
-        (keys.map(col) :+ col(versionCol).as("__open_ver")): _*))
-    val fresh = batch.join(openVer, keys, "left")
-      .where(col("__open_ver").isNull || col(versionCol) > col("__open_ver"))
-      .drop("__open_ver")
-    // open rows of AFFECTED keys re-enter the derivation as change
-    // rows — scd2History KEEPS the original change columns, so
-    // dropping its three derived columns restores the exact change
-    // row (same version, same ts); a batch change with a higher
-    // version then closes it exactly as the batch operator would.
-    // localCheckpoint: both the closed and the open write consume
-    // `redone` — without it the union + window runs twice.
-    val batchKeys = fresh.select(keys.map(col): _*).distinct()
-    val affectedOpen = open.join(batchKeys, keys, "left_semi")
-      .drop("valid_from", "valid_to", "is_current")
-    val carried = open.join(batchKeys, keys, "left_anti")
-    val redone = VersionedDedup.scd2History(
-      fresh.unionByName(
-        affectedOpen.select(fresh.columns.map(col): _*)),
-      keys, col(versionCol), col(tsCol).cast("long"), col(deleteCol))
-      .localCheckpoint()
-    val next = curVer + 1
-    // overwrite-tolerant: a crash after the writes but before the
-    // pointer move leaves these exact dirs as orphans the replay
-    // must be able to rewrite
-    redone.where(!col("is_current")).write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/closed/delta-$next")
-    carried.unionByName(redone.where(col("is_current")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/open-$next")
-    // tombstone maintenance: a touched key with no surviving current
-    // row was killed by this batch's (max-version) delete — record it
-    // so a later redelivery below that version can't resurrect it; a
-    // touched key that IS live again sheds any previous tombstone
-    // (revival); untouched tombstones carry over. Sized by the
-    // deleted-key population, not history; prune with a redelivery
-    // horizon offline if deletes dominate a workload.
-    val touchedLatest = fresh
-      .unionByName(affectedOpen.select(fresh.columns.map(col): _*))
-      .groupBy(keys.map(col): _*)
-      .agg(max(col(versionCol)).as("__maxv"))
-    val liveKeys = redone.where(col("is_current"))
-      .select(keys.map(col): _*).distinct()
-    // redelivery-horizon pruning (optional): tombstones exist only to
-    // block redelivered changes with version ≤ the tombstoned delete;
-    // if the source guarantees redelivery within `h` version units of
-    // the head, a tombstone more than `h` below this batch's max
-    // version can never be hit again — drop it during the rewrite so
-    // the table is sized by the RECENT deleted-key population, not
-    // the cumulative one. No horizon (None) keeps every tombstone
-    // (the safe default for unbounded redelivery).
-    val carriedTombs = tombs.join(batchKeys, keys, "left_anti")
-    val prunedTombs = redeliveryHorizon match {
-      case Some(h) =>
-        val headRow = batch.agg(max(col(versionCol).cast("long"))).head()
-        if (headRow.isNullAt(0)) carriedTombs
-        else carriedTombs.where(
-          col(versionCol).cast("long") >= lit(headRow.getLong(0) - h))
-      case None => carriedTombs
-    }
-    prunedTombs
-      .unionByName(touchedLatest.join(liveKeys, keys, "left_anti")
-        .select((keys.map(col) :+ col("__maxv").as(versionCol)): _*))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/tomb-$next")
-    writePointer(stateDir, next, batchId)
-    // prune open/tomb tables older than the crash-window predecessor
-    // (closed deltas are immutable history — never pruned)
-    for (old <- 1L until (next - 1L); pfx <- Seq("open", "tomb")) {
-      val dir = Paths.get(stateDir, s"$pfx-$old")
-      if (Files.isDirectory(dir)) {
-        StateStore.deleteTree(dir)
+    StateStore.commit(stateDir, batchId, prefixes = Seq("open-", "tomb-")) {
+        (_, next) =>
+      val spark = batch.sparkSession
+      val hist = VersionedDedup.scd2History(
+        batch, keys, col(versionCol), col(tsCol).cast("long"),
+        col(deleteCol))
+      val open = readOpen(spark, stateDir, hist)
+      // at-least-once guard: a redelivered change (version ≤ the key's
+      // committed version) would tie the open row in the re-derivation
+      // window — nondeterministic order, a spurious zero-length closed
+      // interval, and a duplicated row — or, for a key whose latest
+      // committed change was a DELETE, resurrect the deleted key. The
+      // open table can't see deleted keys, so deletes leave a TOMBSTONE
+      // (keys + delete version) the guard unions in; only rows STRICTLY
+      // newer than the committed version are new changes, and a key
+      // whose batch rows are all stale stays untouched.
+      val tombTemplate = batch.select(
+        (keys.map(col) :+ col(versionCol)): _*).limit(0)
+      val tombs = readTombs(spark, stateDir, tombTemplate)
+        .localCheckpoint()
+      val openVer = open.select(
+        (keys.map(col) :+ col(versionCol).as("__open_ver")): _*)
+        .unionByName(tombs.select(
+          (keys.map(col) :+ col(versionCol).as("__open_ver")): _*))
+      val fresh = batch.join(openVer, keys, "left")
+        .where(col("__open_ver").isNull || col(versionCol) > col("__open_ver"))
+        .drop("__open_ver")
+      // open rows of AFFECTED keys re-enter the derivation as change
+      // rows — scd2History KEEPS the original change columns, so
+      // dropping its three derived columns restores the exact change
+      // row (same version, same ts); a batch change with a higher
+      // version then closes it exactly as the batch operator would.
+      // localCheckpoint: both the closed and the open write consume
+      // `redone` — without it the union + window runs twice.
+      val batchKeys = fresh.select(keys.map(col): _*).distinct()
+      val affectedOpen = open.join(batchKeys, keys, "left_semi")
+        .drop("valid_from", "valid_to", "is_current")
+      val carried = open.join(batchKeys, keys, "left_anti")
+      val redone = VersionedDedup.scd2History(
+        fresh.unionByName(
+          affectedOpen.select(fresh.columns.map(col): _*)),
+        keys, col(versionCol), col(tsCol).cast("long"), col(deleteCol))
+        .localCheckpoint()
+      // overwrite-tolerant: a crash after the writes but before the
+      // pointer move leaves these exact dirs as orphans the replay
+      // must be able to rewrite
+      redone.where(!col("is_current")).write.mode(SaveMode.Overwrite)
+        .parquet(s"$stateDir/closed/delta-$next")
+      carried.unionByName(redone.where(col("is_current")))
+        .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/open-$next")
+      // tombstone maintenance: a touched key with no surviving current
+      // row was killed by this batch's (max-version) delete — record it
+      // so a later redelivery below that version can't resurrect it; a
+      // touched key that IS live again sheds any previous tombstone
+      // (revival); untouched tombstones carry over. Sized by the
+      // deleted-key population, not history; prune with a redelivery
+      // horizon offline if deletes dominate a workload.
+      val touchedLatest = fresh
+        .unionByName(affectedOpen.select(fresh.columns.map(col): _*))
+        .groupBy(keys.map(col): _*)
+        .agg(max(col(versionCol)).as("__maxv"))
+      val liveKeys = redone.where(col("is_current"))
+        .select(keys.map(col): _*).distinct()
+      // redelivery-horizon pruning (optional): tombstones exist only to
+      // block redelivered changes with version ≤ the tombstoned delete;
+      // if the source guarantees redelivery within `h` version units of
+      // the head, a tombstone more than `h` below this batch's max
+      // version can never be hit again — drop it during the rewrite so
+      // the table is sized by the RECENT deleted-key population, not
+      // the cumulative one. No horizon (None) keeps every tombstone
+      // (the safe default for unbounded redelivery).
+      val carriedTombs = tombs.join(batchKeys, keys, "left_anti")
+      val prunedTombs = redeliveryHorizon match {
+        case Some(h) =>
+          val headRow = batch.agg(max(col(versionCol).cast("long"))).head()
+          if (headRow.isNullAt(0)) carriedTombs
+          else carriedTombs.where(
+            col(versionCol).cast("long") >= lit(headRow.getLong(0) - h))
+        case None => carriedTombs
       }
+      prunedTombs
+        .unionByName(touchedLatest.join(liveKeys, keys, "left_anti")
+          .select((keys.map(col) :+ col("__maxv").as(versionCol)): _*))
+        .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/tomb-$next")
+      // the commit prunes open/tomb tables older than the crash-window
+      // predecessor (closed deltas are immutable history — never pruned)
+      Nil
     }
   }
-
-  /** The streaming sink: exactly-once per-micro-batch history
-    * maintenance via foreachBatch.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String],
-      versionCol: String, tsCol: String, deleteCol: String,
-      stateDir: String, checkpoint: String,
-      redeliveryHorizon: Option[Long] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, versionCol, tsCol, deleteCol,
-          stateDir, batchId, redeliveryHorizon)
-      }
 }

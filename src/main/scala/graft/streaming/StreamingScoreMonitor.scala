@@ -1,10 +1,7 @@
 package graft.streaming
 
 import graft.operators.StatsAgg
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Live model-score monitoring — the A27/A27b statistics (ROC AUC,
   * two-sample KS drift) maintained over a score stream instead of
@@ -22,11 +19,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * [[StatsAgg.ksFromCells]] over CELL-cardinality state rows, never
   * raw score volume.
   *
-  * Store layout + commit protocol are [[StreamingMatView]]'s:
-  * `state-<version>/` tables under an atomically-moved `_CURRENT`
-  * pointer; replayed batchIds are no-ops, crash orphans are
-  * overwritten. Scale shape per batch: one partial cell aggregate of
-  * the batch (map-side combine) + a merge over |cells| state rows.
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol. Scale shape per batch: one partial cell
+  * aggregate of the batch (map-side combine) + a merge over |cells|
+  * state rows.
   * Cell cardinality is bounded by |keys| × |distinct scores| — for
   * the bounded-precision scores a model emits (round-4 doubles,
   * integer logits) that is dashboard-sized; an unbounded-precision
@@ -35,77 +31,56 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamingScoreMonitor {
 
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
-
-  /** The committed cell table (raw, mergeable); empty-safe. */
-  def readCells(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
+  import StateStore.readVersioned
 
   /** Current AUC served from the maintained cells. */
   def currentAuc(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    StatsAgg.aucFromCells(readCells(spark, stateDir, template), keys)
+    StatsAgg.aucFromCells(readVersioned(spark, stateDir, template), keys)
 
   /** Current PR-AUC (average precision) served from the maintained
     * cells — the same state, no extra maintenance cost.
     */
   def currentPrAuc(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    StatsAgg.prAucFromCells(readCells(spark, stateDir, template), keys)
+    StatsAgg.prAucFromCells(
+      readVersioned(spark, stateDir, template), keys)
 
   /** Current KS D statistic served from the maintained cells. */
   def currentKs(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    StatsAgg.ksFromCells(readCells(spark, stateDir, template), keys)
+    StatsAgg.ksFromCells(readVersioned(spark, stateDir, template), keys)
 
   /** Current Brier score served from the maintained cells. */
   def currentBrier(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    StatsAgg.brierFromCells(readCells(spark, stateDir, template), keys)
+    StatsAgg.brierFromCells(
+      readVersioned(spark, stateDir, template), keys)
 
   /** Current calibration table served from the maintained cells. */
   def currentCalibration(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame, bins: Int = 10): DataFrame =
-    StatsAgg.calibrationFromCells(readCells(spark, stateDir, template),
-      keys, bins)
+    StatsAgg.calibrationFromCells(
+      readVersioned(spark, stateDir, template), keys, bins)
 
   /** Current expected calibration error served from the cells. */
   def currentEce(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame, bins: Int = 10): DataFrame =
-    StatsAgg.eceFromCells(readCells(spark, stateDir, template), keys, bins)
+    StatsAgg.eceFromCells(
+      readVersioned(spark, stateDir, template), keys, bins)
 
   /** Current full ROC curve served from the maintained cells. */
   def currentRocCurve(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    StatsAgg.rocCurveFromCells(readCells(spark, stateDir, template), keys)
+    StatsAgg.rocCurveFromCells(
+      readVersioned(spark, stateDir, template), keys)
 
   /** Fold ONE micro-batch of scored rows into the cell store;
     * replays (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], score: Column,
-      label: Column, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = StatsAgg.scoreCells(batch, keys, score, label)
-      val cur = readCells(spark, stateDir, partial)
-      val merged = StatsAgg.mergeScoreCells(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink via foreachBatch — exactly-once cell
-    * maintenance with the commit-pointer protocol.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], score: Column,
-      label: Column, stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, score, label, stateDir, batchId)
-      }
+      label: Column, stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      StatsAgg.scoreCells(batch, keys, score, label))(
+      StatsAgg.mergeScoreCells(_, keys))
 }

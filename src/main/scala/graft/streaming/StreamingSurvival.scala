@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.operators.StatsAgg
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST24 — streaming maintenance of the A44/A45 survival family: the
   * retention curve (and its two-cohort verdict) served live over an
@@ -26,16 +24,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * the curve, [[StatsAgg.logRankTest]] for the two-cohort verdict —
   * so parity with the batch computation is STRUCTURAL.
   *
-  * Store layout and commit protocol are the family's verbatim:
-  * `state-<version>/` parquet under an atomically-moved `_CURRENT`
-  * pointer, batchId replay guard, DOWNWARD-walk O(1)
-  * crash-self-healing cleanup.
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol.
   */
 object StreamingSurvival {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   /** One (keys, subject, t0, t1) lifetime row per subject in this
     * batch (`day` any monotone long time unit).
@@ -50,11 +42,6 @@ object StreamingSurvival {
     states.groupBy((keys.map(col) :+ col("__subj")): _*)
       .agg(min(col("t0")).as("t0"), max(col("t1")).as("t1"))
 
-  /** The committed lifetime state. Empty-safe. */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** The censored subject table at the commit point: duration and the
     * event indicator under a `censorDays` horizon off the committed
     * max day. Shared by both read faces; runs the SAME derivation a
@@ -62,7 +49,7 @@ object StreamingSurvival {
     */
   def subjects(spark: SparkSession, stateDir: String, keys: Seq[String],
       censorDays: Long, template: DataFrame): DataFrame = {
-    val st = readState(spark, stateDir, template)
+    val st = StateStore.readVersioned(spark, stateDir, template)
     val md = st.agg(max(col("t1")).as("__md"))
     st.crossJoin(broadcast(md)).select(
       (keys.map(col) ++ Seq(col("__subj"),
@@ -103,27 +90,7 @@ object StreamingSurvival {
 
   /** Fold ONE ingest batch into the store; replays are no-ops. */
   def applyBatch(batch: DataFrame, keys: Seq[String], subject: Column,
-      day: Column, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = partialState(batch, keys, subject, day)
-      val cur = readState(spark, stateDir, partial)
-      val merged = mergeStates(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: exactly-once per micro-batch; the live curve
-    * and verdict between batches equal the batch operators over
-    * everything ingested.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], subject: Column,
-      day: Column, stateDir: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, subject, day, stateDir, batchId)
-      }
+      day: Column, stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId,
+      partialState(batch, keys, subject, day))(mergeStates(_, keys))
 }

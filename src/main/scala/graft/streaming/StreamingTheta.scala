@@ -1,14 +1,12 @@
 package graft.streaming
 
 import graft.functions.ThetaSketch
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming maintenance of A18 theta-sketch segment states — the
   * last sketch-state family ([[graft.functions.ThetaSketch]]) brought
-  * under the exactly-once write-then-pointer protocol the HLL/KLL
+  * under the exactly-once [[StateStore]] protocol the HLL/KLL
   * matview states already ride ([[StreamingMatView]]).
   *
   * Each micro-batch folds into one theta binary per key on disk
@@ -19,25 +17,17 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * differences) between ANY two maintained segments at the current
   * commit point without touching raw history.
   *
-  * Store layout and commit protocol are [[StreamingMatView]]'s
-  * verbatim: `state-<version>/` parquet tables under an
-  * atomically-moved `_CURRENT` pointer; a crash between state write
-  * and pointer move leaves an orphan the replayed batch overwrites
-  * (never double-counted — the union would silently absorb a replay
+  * State is one `state-<version>/` table per applied batch under the
+  * [[StateStore]] protocol. The union would silently absorb a replay
   * of the SAME rows, but a replayed batch after a successful commit
   * would re-union a different merged lineage, so the batchId guard
-  * still does the exactness work); replays at or below the pointer's
-  * batchId are skipped outright.
+  * still does the exactness work.
   *
   * Scale shape: the merge reads |keys| state rows + one batch's
   * partials; raw volume reaches one (keys) aggregate per batch and
   * never again.
   */
 object StreamingTheta {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   /** One theta binary per key over this batch's values. */
   def partialState(batch: DataFrame, keys: Seq[String],
@@ -50,15 +40,10 @@ object StreamingTheta {
     states.groupBy(keys.map(col): _*)
       .agg(ThetaSketch.thetaUnionAgg(col("theta_state")).as("theta_state"))
 
-  /** The committed state table (raw, mergeable). Empty-safe. */
-  def readState(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** Read face: per-key distinct estimates at the commit point. */
   def currentEstimates(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    readState(spark, stateDir, template)
+    StateStore.readVersioned(spark, stateDir, template)
       .select((keys.map(col) :+
         round(ThetaSketch.thetaEstimate(col("theta_state")))
           .cast("long").as("n_distinct")): _*)
@@ -71,7 +56,7 @@ object StreamingTheta {
   def segmentAlgebra(spark: SparkSession, stateDir: String,
       keyCol: String, a: String, b: String,
       template: DataFrame): DataFrame = {
-    val state = readState(spark, stateDir, template)
+    val state = StateStore.readVersioned(spark, stateDir, template)
     val sa = state.where(col(keyCol) === a)
       .select(col("theta_state").as("__sa"))
     val sb = state.where(col(keyCol) === b)
@@ -90,26 +75,7 @@ object StreamingTheta {
     * stream. Replays (batchId <= pointer's) are no-ops.
     */
   def applyBatch(batch: DataFrame, keys: Seq[String], value: Column,
-      stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val partial = partialState(batch, keys, value)
-      val cur = readState(spark, stateDir, partial)
-      val merged = mergeStates(cur.unionByName(partial), keys)
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
-
-  /** The streaming sink: exactly-once per micro-batch via
-    * foreachBatch; `currentEstimates`/`segmentAlgebra` between batches
-    * equal the batch aggregate over everything ingested so far.
-    */
-  def maintain(stream: DataFrame, keys: Seq[String], value: Column,
-      stateDir: String, checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, value, stateDir, batchId)
-      }
+      stateDir: String, batchId: Long): Unit =
+    StateStore.fold(stateDir, batchId, partialState(batch, keys, value))(
+      mergeStates(_, keys))
 }

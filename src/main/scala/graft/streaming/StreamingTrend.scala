@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** ST20: streaming DAILY-GRID trend store — a per-key (day, count)
   * grid maintained under the store protocol, serving the whole
@@ -21,11 +19,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * so the read faces run the batch operators UNCHANGED on the
   * committed grid and batch parity is STRUCTURAL, spec-pinned.
   *
-  * Store layout + commit protocol: [[StreamingHistogram]]'s exactly —
-  * `state-<version>/` parquet per applied batch, `_CURRENT`
-  * "<version> <batchId>" moved atomically AFTER the state write,
-  * replayed batchIds skipped outright, O(1) old-version cleanup.
-  * SINGLE-WRITER per stateDir; readers safe at any point.
+  * State is one `state-<version>/` grid per applied batch under the
+  * [[StateStore]] protocol. SINGLE-WRITER per stateDir; readers safe
+  * at any point.
   *
   * The monitoring deployment shape this closes: production events
   * stream in; between any two batches the monitor asks "is there a
@@ -35,10 +31,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * keys before anyone acts on a per-key alarm.
   */
 object StreamingTrend {
-
-  /** (version, lastAppliedBatchId); (0, -1) before the first commit. */
-  def readPointer(stateDir: String): (Long, Long) =
-    StateStore.readPointer(stateDir)
 
   /** One batch's grid partial: (keys, __day, cnt). `ts` is epoch
     * seconds (the library-wide long contract — callers derive it with
@@ -55,39 +47,19 @@ object StreamingTrend {
       .groupBy((keys.map(col) :+ col("__day")): _*)
       .agg(count(lit(1)).as("cnt"))
 
-  /** The committed grid (keys, __day, cnt); empty-safe. */
-  def grid(spark: SparkSession, stateDir: String,
-      template: DataFrame): DataFrame =
-    StateStore.readVersioned(spark, stateDir, template)
-
   /** Fold ONE batch into the store; replays are no-ops. */
   def applyBatch(batch: DataFrame, keys: Seq[String], ts: Column,
       stateDir: String, batchId: Long,
-      bucketSeconds: Long = 86400L): Unit = {
-    val spark = batch.sparkSession
-    StateStore.commit(stateDir, batchId) { (_, next) =>
-      val p = partial(batch, keys, ts, bucketSeconds)
-      val merged = grid(spark, stateDir, p).unionByName(p)
-        .groupBy((keys.map(col) :+ col("__day")): _*)
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/state-$next")
-    }
-  }
+      bucketSeconds: Long = 86400L): Unit =
+    StateStore.fold(stateDir, batchId,
+      partial(batch, keys, ts, bucketSeconds))(
+      _.groupBy((keys.map(col) :+ col("__day")): _*)
+        .agg(sum(col("cnt")).cast("long").as("cnt")))
 
-  /** The streaming sink: applyBatch inside foreachBatch. */
-  def maintain(stream: DataFrame, keys: Seq[String], ts: Column,
-      stateDir: String, checkpoint: String,
-      bucketSeconds: Long = 86400L): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keys, ts, stateDir, batchId, bucketSeconds)
-      }
-
+  /** The committed grid (keys, __day, __cnt as double). */
   private def gridSeries(spark: SparkSession, stateDir: String,
       keys: Seq[String], template: DataFrame): DataFrame =
-    grid(spark, stateDir, template)
+    StateStore.readVersioned(spark, stateDir, template)
       .select((keys.map(col) :+ col("__day")) :+
         col("cnt").cast("double").as("__cnt"): _*)
 

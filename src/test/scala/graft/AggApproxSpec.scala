@@ -94,7 +94,7 @@ class AggApproxSpec extends SparkSpec with NeedsTestdata {
   }
 
   test("A18 streaming theta store: per-batch folds equal the batch aggregate; replay no-op; crash heal; set algebra live") {
-    import graft.streaming.StreamingTheta
+    import graft.streaming.{StateStore, StreamingTheta}
     val rnd = new scala.util.Random(23)
     // (id, segment, user) — overlapping user sets per segment, well
     // inside the exact regime so every estimate must be EXACT
@@ -122,14 +122,14 @@ class AggApproxSpec extends SparkSpec with NeedsTestdata {
     StreamingTheta.applyBatch(batches(1).toDF("id", "seg", "u"),
       Seq("seg"), col("u"), dir, batchId = 1L)
     assert(estimates() === before)
-    assert(StreamingTheta.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     // crash-window orphan heals on the next apply
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(dir, "state-4"))
     StreamingTheta.applyBatch(
       Seq((9000L, "buy", "u_new")).toDF("id", "seg", "u"),
       Seq("seg"), col("u"), dir, batchId = 3L)
-    assert(StreamingTheta.readPointer(dir) === ((4L, 3L)))
+    assert(StateStore.readPointer(dir) === ((4L, 3L)))
     val versions = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("state-")).sorted.toSeq
     assert(versions === Seq("state-3", "state-4"))
@@ -145,15 +145,14 @@ class AggApproxSpec extends SparkSpec with NeedsTestdata {
   }
 
   test("A18 streaming theta store: end-to-end through foreachBatch on a MemoryStream") {
-    import graft.streaming.StreamingTheta
+    import graft.streaming.{StateStore, StreamingTheta}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("theta-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("theta-ck").toString
     val in = MemoryStream[(Long, String, String)]
-    val q = StreamingTheta.maintain(
-      in.toDF().toDF("id", "seg", "u"), Seq("seg"), col("u"),
-      dir, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("id", "seg", "u"), ckpt)(
+      StreamingTheta.applyBatch(_, Seq("seg"), col("u"), dir, _)).start()
     val rnd = new scala.util.Random(29)
     val all = (0 until 400).map(i =>
       (i.toLong, if (i % 3 == 0) "buy" else "err", s"u${rnd.nextInt(120)}"))

@@ -110,7 +110,7 @@ class BitmapAggSpec extends SparkSpec {
   }
 
   test("ST21 streaming bitmap store: per-batch folds EXACTLY equal the batch aggregate; replay no-op; crash heal incl. planted orphans; exact set algebra + contains live") {
-    import graft.streaming.StreamingBitmap
+    import graft.streaming.{StateStore, StreamingBitmap}
     val rnd = new scala.util.Random(31)
     // (row_id, segment, member_id) — overlapping member sets per
     // segment, with repeats across batches (OR must absorb them) and
@@ -141,7 +141,7 @@ class BitmapAggSpec extends SparkSpec {
     StreamingBitmap.applyBatch(batches(1).toDF("id", "seg", "m"),
       Seq("seg"), col("m"), dir, batchId = 1L)
     assert(counts() === before)
-    assert(StreamingBitmap.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     // crash-window: plant TWO orphaned versions (a crash between
     // writePointer and the cleanup loop on consecutive commits);
     // the downward walk must remove both on the next apply
@@ -152,7 +152,7 @@ class BitmapAggSpec extends SparkSpec {
     StreamingBitmap.applyBatch(
       Seq((9000L, "buy", 777_000L)).toDF("id", "seg", "m"),
       Seq("seg"), col("m"), dir, batchId = 3L)
-    assert(StreamingBitmap.readPointer(dir) === ((4L, 3L)))
+    assert(StateStore.readPointer(dir) === ((4L, 3L)))
     val versions = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("state-")).sorted.toSeq
     assert(versions === Seq("state-3", "state-4"))
@@ -175,15 +175,14 @@ class BitmapAggSpec extends SparkSpec {
   }
 
   test("ST21 streaming bitmap store: end-to-end through foreachBatch on a MemoryStream") {
-    import graft.streaming.StreamingBitmap
+    import graft.streaming.{StateStore, StreamingBitmap}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("bm-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("bm-ck").toString
     val in = MemoryStream[(Long, String, Long)]
-    val q = StreamingBitmap.maintain(
-      in.toDF().toDF("id", "seg", "m"), Seq("seg"), col("m"),
-      dir, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("id", "seg", "m"), ckpt)(
+      StreamingBitmap.applyBatch(_, Seq("seg"), col("m"), dir, _)).start()
     val rnd = new scala.util.Random(37)
     val all = (0 until 400).map(i =>
       (i.toLong, if (i % 3 == 0) "buy" else "err", rnd.nextInt(120).toLong))

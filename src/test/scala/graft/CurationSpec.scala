@@ -1443,7 +1443,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("ST23 streaming collocation store: live phrase table equals the batch operator per batch; replay no-op; planted-orphan crash heal; MemoryStream e2e") {
-    import graft.streaming.StreamingCollocations
+    import graft.streaming.{StateStore, StreamingCollocations}
     val phrases = Seq("new york", "hot dog", "data lake")
     val fill = Seq("alpha", "beta", "gamma", "delta", "eps")
     val rnd = new scala.util.Random(47)
@@ -1491,8 +1491,8 @@ class CurationSpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("coll-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("coll-ck").toString
     val in = MemoryStream[(Long, String)]
-    val q = StreamingCollocations.maintain(
-      in.toDF().toDF("doc_id", "text"), col("text"), dir2, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("doc_id", "text"), ckpt)(
+      StreamingCollocations.applyBatch(_, col("text"), dir2, _)).start()
     try {
       in.addData(all.take(120): _*)
       q.processAllAvailable()

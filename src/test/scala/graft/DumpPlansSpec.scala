@@ -6,8 +6,9 @@ import java.nio.file.Files
 class DumpPlansSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The two tables q1_agg and q_topk read, a few rows each: plans only
-    * need the schema, so the spec runs without the parquet fixtures. */
+  /** The tables q1_agg, q_topk and q_topk_freq read, a few rows each:
+    * plans only need the schema, so the spec runs without the parquet
+    * fixtures. */
   private lazy val sf: String = {
     val dir = Files.createTempDirectory("dumpplans-sf").toString
     Seq(("A", "F", 17.0, 21168.23, 0.04, 0.02), ("N", "O", 36.0, 45983.16, 0.09, 0.06))
@@ -17,6 +18,7 @@ class DumpPlansSpec extends SparkSpec {
     Seq((1L, 370L, 172799.49), (2L, 781L, 38426.09))
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
+    Seq("click", "view").toDF("event_type").write.parquet(s"$dir/events.parquet")
     dir
   }
 
@@ -31,6 +33,15 @@ class DumpPlansSpec extends SparkSpec {
       assert(txt.nonEmpty, s"$p is empty")
       assert(txt.contains("Physical Plan"), s"$p has no Physical Plan section")
     }
+  }
+
+  test("a plan that runs a graft Aggregator names it without an identity hash") {
+    val dir = Files.createTempDirectory("dumpplans")
+    val Seq(p) = DumpPlans.dump(spark, sf, dir.toString, "after", Seq("q_topk_freq"))
+    val txt = Files.readString(p)
+    val hashed = raw"graft\.functions\.\w+@[0-9a-f]+".r.findAllIn(txt).toSeq
+    assert(hashed.isEmpty, s"identity hashes in the plan: ${hashed.distinct}")
+    assert(txt.contains("TopK(3, 64)"), "the aggregator is in the plan")
   }
 
   test("an unknown query name fails before anything is written") {

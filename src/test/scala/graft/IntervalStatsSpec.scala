@@ -2107,7 +2107,7 @@ class IntervalStatsSpec extends SparkSpec {
   // ---- ST24 streaming survival store ------------------------------------
 
   test("ST24 streaming survival store: live KM + log-rank equal the batch operators per batch; replay no-op; orphan heal; MemoryStream e2e") {
-    import graft.streaming.StreamingSurvival
+    import graft.streaming.{StateStore, StreamingSurvival}
     val rnd = new scala.util.Random(59)
     // events (key, user, day) with duplicates (min/max must absorb)
     val all = (0 until 900).map { i =>
@@ -2187,9 +2187,9 @@ class IntervalStatsSpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("surv-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("surv-ck").toString
     val in = MemoryStream[(String, Long, Long)]
-    val q = StreamingSurvival.maintain(
-      in.toDF().toDF("k", "u", "day"), Seq("k"), col("u"), col("day"),
-      dir2, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("k", "u", "day"), ckpt)(
+      StreamingSurvival.applyBatch(_, Seq("k"), col("u"), col("day"),
+        dir2, _)).start()
     try {
       in.addData(all.take(500): _*)
       q.processAllAvailable()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MatView
-import graft.streaming.StreamingMatView
+import graft.streaming.{StateStore, StreamingMatView}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -112,7 +112,7 @@ class MatViewSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("matview").toString
     val all = rows(300, seed = 9)
     val batches = all.grouped(100).toSeq
-    def state() = asMap(StreamingMatView.readState(
+    def state() = asMap(StateStore.readVersioned(
       spark, dir, direct(all.take(1))))
     // fold three batches, checking parity after each commit
     batches.zipWithIndex.foreach { case (b, i) =>
@@ -133,7 +133,7 @@ class MatViewSpec extends SparkSpec {
     StreamingMatView.applyBatch(batches(1).toDF("id", "k", "v", "u"),
       Seq("k"), col("v"), col("u"), dir, batchId = 1L)
     assert(state() === before)
-    assert(StreamingMatView.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     // crash-window recovery: an orphan next-version directory (state
     // written, pointer move lost) is overwritten by the re-applied
     // batch, not double-counted
@@ -142,7 +142,7 @@ class MatViewSpec extends SparkSpec {
     StreamingMatView.applyBatch(
       rows(50, seed = 21).toDF("id", "k", "v", "u"),
       Seq("k"), col("v"), col("u"), dir, batchId = 3L)
-    assert(StreamingMatView.readPointer(dir) === ((4L, 3L)))
+    assert(StateStore.readPointer(dir) === ((4L, 3L)))
     // pruning: only current + predecessor versions remain on disk
     val versions = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("state-")).sorted.toSeq
@@ -154,9 +154,9 @@ class MatViewSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("matview-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("matview-ck").toString
     val in = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMatView.maintain(
-      in.toDF().toDF("id", "k", "v", "u"),
-      Seq("k"), col("v"), col("u"), dir, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("id", "k", "v", "u"), ckpt)(
+      StreamingMatView.applyBatch(_, Seq("k"), col("v"), col("u"), dir, _))
+      .start()
     val all = rows(200, seed = 13)
     try {
       in.addData(all.take(120): _*)
@@ -164,7 +164,7 @@ class MatViewSpec extends SparkSpec {
       in.addData(all.drop(120): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val state = StreamingMatView.readState(spark, dir, direct(all.take(1)))
+    val state = StateStore.readVersioned(spark, dir, direct(all.take(1)))
     val got = asMap(state)
     val expect = asMap(direct(all))
     assert(got.keySet === expect.keySet)

@@ -128,7 +128,7 @@ class RegressionSpec extends SparkSpec {
   }
 
   test("ST22 streaming regression store: per-batch live fit is BIT-equal to the batch fit over everything ingested; replay no-op; planted-orphan crash heal") {
-    import graft.streaming.StreamingRegression
+    import graft.streaming.{StateStore, StreamingRegression}
     val rnd = new scala.util.Random(43)
     val all = (0 until 900).map { i =>
       val k = if (rnd.nextInt(2) == 0) "a" else "b"
@@ -162,7 +162,7 @@ class RegressionSpec extends SparkSpec {
     StreamingRegression.applyBatch(df(batches(1)), Seq("k"),
       col("x1"), col("x2"), col("y"), dir, batchId = 1L)
     assert(live() === before)
-    assert(StreamingRegression.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     // planted orphans (crash between pointer move and cleanup) heal
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(dir, "state-1"))
@@ -171,7 +171,7 @@ class RegressionSpec extends SparkSpec {
     StreamingRegression.applyBatch(
       df(Seq((9000L, "a", 3.0, 7.0, 2.5))), Seq("k"),
       col("x1"), col("x2"), col("y"), dir, batchId = 3L)
-    assert(StreamingRegression.readPointer(dir) === ((4L, 3L)))
+    assert(StateStore.readPointer(dir) === ((4L, 3L)))
     val versions = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("state-")).sorted.toSeq
     assert(versions === Seq("state-3", "state-4"))
@@ -179,15 +179,16 @@ class RegressionSpec extends SparkSpec {
   }
 
   test("ST22 streaming regression store: end-to-end through foreachBatch on a MemoryStream") {
-    import graft.streaming.StreamingRegression
+    import graft.streaming.{StateStore, StreamingRegression}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("reg-ms").toString
     val ckpt = java.nio.file.Files.createTempDirectory("reg-ck").toString
     val in = MemoryStream[(Long, String, Double, Double, Double)]
-    val q = StreamingRegression.maintain(
-      in.toDF().toDF("id", "k", "x1", "x2", "y"), Seq("k"),
-      col("x1"), col("x2"), col("y"), dir, ckpt).start()
+    val q = StateStore.maintain(
+      in.toDF().toDF("id", "k", "x1", "x2", "y"), ckpt)(
+      StreamingRegression.applyBatch(_, Seq("k"),
+        col("x1"), col("x2"), col("y"), dir, _)).start()
     val all = (0 until 400).map { i =>
       (i.toLong, if (i % 3 == 0) "a" else "b",
         (i % 11).toDouble, (i % 7).toDouble,

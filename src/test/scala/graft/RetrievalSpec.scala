@@ -450,7 +450,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("streaming postings store: end-to-end through foreachBatch on a MemoryStream") {
-    import graft.streaming.StreamingPostings
+    import graft.streaming.{StateStore, StreamingPostings}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val store = java.nio.file.Files
@@ -460,9 +460,9 @@ class RetrievalSpec extends SparkSpec {
     val docs = (0 until 120).map(i =>
       (i.toLong, s"tok${i % 7} shared tok${i % 3}"))
     val in = MemoryStream[(Long, String)]
-    val q = StreamingPostings.maintain(
-      in.toDF().toDF("doc_id", "text"), "doc_id", col("text"),
-      store, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("doc_id", "text"), ckpt)(
+      StreamingPostings.applyBatch(_, "doc_id", col("text"), store, _))
+      .start()
     try {
       in.addData(docs.take(70): _*)
       q.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.TimeSeries
-import graft.streaming.StreamingHistogram
+import graft.streaming.{StateStore, StreamingHistogram}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -62,7 +62,7 @@ class StreamingHistogramSpec extends SparkSpec {
     val extra = Seq(("a", 5000L, 12.34))
     StreamingHistogram.applyBatch(df(extra), Seq("k"), col("v"), store, 3L)
     assert(fromStore(store, rows ++ extra) == batchRef(rows ++ extra))
-    assert(StreamingHistogram.readPointer(store) == ((4L, 3L)))
+    assert(StateStore.readPointer(store) == ((4L, 3L)))
     // crash between writePointer and the delete: state-(v-2) survives
     // one commit. The downward-walking cleanup must pick up BOTH
     // expired versions at the next commit, not just the newest (r18
@@ -71,7 +71,7 @@ class StreamingHistogramSpec extends SparkSpec {
     new java.io.File(s"$store/state-2").mkdirs()
     StreamingHistogram.applyBatch(
       df(Seq(("b", 6000L, 1.0))), Seq("k"), col("v"), store, 4L)
-    assert(StreamingHistogram.readPointer(store)._1 == 5L)
+    assert(StateStore.readPointer(store)._1 == 5L)
     assert(!Files.isDirectory(java.nio.file.Paths.get(s"$store/state-1")))
     assert(!Files.isDirectory(java.nio.file.Paths.get(s"$store/state-2")))
     assert(!Files.isDirectory(java.nio.file.Paths.get(s"$store/state-3")))
@@ -121,7 +121,7 @@ class StreamingHistogramSpec extends SparkSpec {
     StreamingHistogram.applyBatch(df(rows), Seq("k"), col("v"), store, 0L)
     val template = StreamingHistogram.partial(df(rows).limit(0),
       Seq("k"), col("v"), 2)
-    val hist = StreamingHistogram.histogram(spark, store, template)
+    val hist = StateStore.readVersioned(spark, store, template)
     for (p <- Seq(0.0, 0.1, 0.25, 0.5, 0.77, 0.9, 1.0)) {
       val got = StreamingHistogram.percentileOf(hist, Seq("k"), p)
         .select("k", "pct").as[(String, Double)].collect().toMap
@@ -198,8 +198,8 @@ class StreamingHistogramSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-shist-ckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long, Double)]
-    val q = StreamingHistogram.maintain(
-      mem.toDF().toDF("k", "id", "v"), Seq("k"), col("v"), store, ckpt)
+    val q = StateStore.maintain(mem.toDF().toDF("k", "id", "v"), ckpt)(
+      StreamingHistogram.applyBatch(_, Seq("k"), col("v"), store, _))
       .start()
     try {
       mem.addData(rows.take(150): _*)

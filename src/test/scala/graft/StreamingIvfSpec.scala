@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.Similarity
-import graft.streaming.StreamingIvf
+import graft.streaming.{StateStore, StreamingIvf}
 import org.apache.spark.sql.functions._
 
 /** ST15: streaming maintenance of the persisted IVF index — parity
@@ -163,9 +163,9 @@ class StreamingIvfSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-sivf-ck").toString
     val rows = vecsSlice(0L, 120L)
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingIvf.maintain(
-      in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      store, ckpt, nlist = 8, iters = 2).start()
+    val q = StateStore.maintain(in.toDF().toDF("vec_id", "embedding"), ckpt)(
+      StreamingIvf.applyBatch(_, "vec_id", "embedding", store, _,
+        nlist = 8, iters = 2)).start()
     try {
       in.addData(rows.take(70): _*)
       q.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.Curation
-import graft.streaming.StreamingNgramLm
+import graft.streaming.{StateStore, StreamingNgramLm}
 import org.apache.spark.sql.functions._
 
 /** ST16: streaming maintenance of the KN trigram model — parity with
@@ -106,9 +106,9 @@ class StreamingNgramLmSpec extends SparkSpec {
     val store = Files.createTempDirectory("graft-snglm-ms").toString
     val ckpt = Files.createTempDirectory("graft-snglm-ck").toString
     val in = MemoryStream[(Long, String)]
-    val q = StreamingNgramLm.maintain(
-      in.toDF().toDF("doc_id", "text"), "doc_id", col("text"),
-      store, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("doc_id", "text"), ckpt)(
+      StreamingNgramLm.applyBatch(_, "doc_id", col("text"), store, _))
+      .start()
     try {
       in.addData(corpus.take(3): _*)
       q.processAllAvailable()

@@ -927,11 +927,11 @@ class StreamingSpec extends SparkSpec {
     val tmpl = graft.operators.VersionedDedup.scd2History(
       df(all), Seq("id"), col("lsn"), col("ts"), col("del"))
     assert(norm(StreamingScd2.history(spark, dir, tmpl)) === expect)
-    assert(StreamingScd2.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     // replaying the last batch is a no-op (pointer and rows stable)
     StreamingScd2.applyBatch(df(batches.last), Seq("id"), "lsn", "ts",
       "del", dir, 2L)
-    assert(StreamingScd2.readPointer(dir) === ((3L, 2L)))
+    assert(StateStore.readPointer(dir) === ((3L, 2L)))
     assert(norm(StreamingScd2.history(spark, dir, tmpl)) === expect)
     // crash window: version-4 dirs were written but the pointer never
     // moved — garbage orphans must be invisible now and fully
@@ -970,7 +970,7 @@ class StreamingSpec extends SparkSpec {
     // be dropped before the re-derivation, not tie the open row into
     // a spurious zero-length closed interval + duplicate open row
     StreamingScd2.applyBatch(df(b5), Seq("id"), "lsn", "ts", "del", dir, 5L)
-    assert(StreamingScd2.readPointer(dir) === ((6L, 5L)))
+    assert(StateStore.readPointer(dir) === ((6L, 5L)))
     assert(norm(StreamingScd2.history(spark, dir, tmpl)) === expect3,
       "equal-version redelivery in a later batch must be a no-op on rows")
     // ...and a stale mix (one redelivered, one genuinely new) applies
@@ -1027,10 +1027,10 @@ class StreamingSpec extends SparkSpec {
       all.toDF("sym", "ts", "id", "price"), Seq("sym"),
       col("ts"), col("id"), col("price"), 60L))
     val in = MemoryStream[(String, Long, Long, Double)]
-    val q = StreamingOhlc.maintain(
-      in.toDF().toDF("sym", "ts", "id", "price"),
-      Seq("sym"), col("ts"), col("id"), col("price"), 60L,
-      dir, ckpt).start()
+    val q = StateStore.maintain(
+      in.toDF().toDF("sym", "ts", "id", "price"), ckpt)(
+      StreamingOhlc.applyBatch(_, Seq("sym"), col("ts"), col("id"),
+        col("price"), 60L, dir, _)).start()
     try {
       for (b <- all.grouped(80)) {
         in.addData(b: _*)
@@ -1040,14 +1040,14 @@ class StreamingSpec extends SparkSpec {
     val tmpl = StreamingOhlc.partialBars(all.take(1).toDF("sym", "ts", "id", "price"),
       Seq("sym"), col("ts"), col("id"), col("price"), 60L)
     def state() = bars(StreamingOhlc.finalizeBars(
-      StreamingOhlc.readBars(spark, dir, tmpl), Seq("sym")))
+      StateStore.readVersioned(spark, dir, tmpl), Seq("sym")))
     assert(state() === expect,
       "streamed bars must equal the batch ohlcResample over all rows")
     // replay of a committed batch is a no-op on rows and pointer
-    val ptr = StreamingOhlc.readPointer(dir)
+    val ptr = StateStore.readPointer(dir)
     StreamingOhlc.applyBatch(all.take(80).toDF("sym", "ts", "id", "price"),
       Seq("sym"), col("ts"), col("id"), col("price"), 60L, dir, 0L)
-    assert(StreamingOhlc.readPointer(dir) === ptr)
+    assert(StateStore.readPointer(dir) === ptr)
     assert(state() === expect)
     // crash window: an orphan next-version dir is overwritten, not
     // double-counted
@@ -1090,9 +1090,10 @@ class StreamingSpec extends SparkSpec {
       df(all), Seq("k"), col("sign"), Seq("ver")))
     assert(expect.nonEmpty && expect.size < 40) // deletions really occurred
     val in = MemoryStream[(Long, Long, String, Int)]
-    val q = StreamingCollapse.maintain(
-      in.toDF().toDF("k", "ver", "payload", "sign"),
-      Seq("k"), "sign", Seq("ver"), dir, ckpt).start()
+    val q = StateStore.maintain(
+      in.toDF().toDF("k", "ver", "payload", "sign"), ckpt)(
+      StreamingCollapse.applyBatch(_, Seq("k"), "sign", Seq("ver"), dir, _))
+      .start()
     try {
       for (b <- all.grouped(45)) {
         in.addData(b: _*)
@@ -1102,14 +1103,14 @@ class StreamingSpec extends SparkSpec {
     val tmpl = StreamingCollapse.partialState(
       df(all.take(1)), Seq("k"), "sign", Seq("ver"))
     def state() = viewOf(StreamingCollapse.finalizeState(
-      StreamingCollapse.readState(spark, dir, tmpl), Seq("k")))
+      StateStore.readVersioned(spark, dir, tmpl), Seq("k")))
     assert(state() === expect,
       "streamed FINAL view must equal batch collapseFinal over all rows")
     // replay of a committed batch is a no-op on rows and pointer
-    val ptr = StreamingCollapse.readPointer(dir)
+    val ptr = StateStore.readPointer(dir)
     StreamingCollapse.applyBatch(df(all.take(45)), Seq("k"), "sign",
       Seq("ver"), dir, 0L)
-    assert(StreamingCollapse.readPointer(dir) === ptr)
+    assert(StateStore.readPointer(dir) === ptr)
     assert(state() === expect)
     // crash window: an orphan next-version dir is overwritten; a late
     // +1 resurrects a fully-deleted key (net climbs back above 0)
@@ -1150,10 +1151,9 @@ class StreamingSpec extends SparkSpec {
       df(all), Seq("k"), ord = Seq(col("t"), col("id")),
       ts = col("t"), value = col("v")))
     val in = MemoryStream[(String, Long, Long, Double)]
-    val q = StreamingDeltaSum.maintain(
-      in.toDF().toDF("k", "t", "id", "v"),
-      Seq("k"), col("t"), col("id"), col("v"),
-      sliceSeconds = 60L, delaySeconds = 120L, dir, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("k", "t", "id", "v"), ckpt)(
+      StreamingDeltaSum.applyBatch(_, Seq("k"), col("t"), col("id"), col("v"),
+        sliceSeconds = 60L, delaySeconds = 120L, dir, _)).start()
     try {
       for (b <- batches) {
         in.addData(b: _*)
@@ -1273,9 +1273,9 @@ class StreamingSpec extends SparkSpec {
     val expectAuc = aucOf(StatsAgg.auc(df(all), Seq("k"), col("s"), col("l")))
     val expectKs = ksOf(StatsAgg.ksTest(df(all), Seq("k"), col("s"), col("l")))
     val in = MemoryStream[(String, Double, Boolean)]
-    val q = StreamingScoreMonitor.maintain(
-      in.toDF().toDF("k", "s", "l"), Seq("k"), col("s"), col("l"),
-      dir, ckpt).start()
+    val q = StateStore.maintain(in.toDF().toDF("k", "s", "l"), ckpt)(
+      StreamingScoreMonitor.applyBatch(_, Seq("k"), col("s"), col("l"),
+        dir, _)).start()
     try {
       for (b <- all.grouped(100)) {
         in.addData(b: _*)
@@ -1314,10 +1314,10 @@ class StreamingSpec extends SparkSpec {
       .select("k", "ece").as[(String, Double)].collect().toMap
       === expectEce)
     // replay of a committed batch is a no-op on cells and pointer
-    val ptr = StreamingScoreMonitor.readPointer(dir)
+    val ptr = StateStore.readPointer(dir)
     StreamingScoreMonitor.applyBatch(df(all.take(100)), Seq("k"),
       col("s"), col("l"), dir, 0L)
-    assert(StreamingScoreMonitor.readPointer(dir) === ptr)
+    assert(StateStore.readPointer(dir) === ptr)
     assert(aucOf(StreamingScoreMonitor.currentAuc(spark, dir, Seq("k"), tmpl))
       === expectAuc)
     // crash window: an orphan next-version dir is overwritten, not

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.operators.TimeSeries
-import graft.streaming.StreamingTrend
+import graft.streaming.{StateStore, StreamingTrend}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -112,7 +112,7 @@ class StreamingTrendSpec extends SparkSpec {
     new java.io.File(s"$store/state-4").mkdirs()
     assert(collectMk(StreamingTrend.mannKendall(spark, store, Seq("k"),
       template)) == full)
-    assert(StreamingTrend.readPointer(store) == ((2L, 1L)))
+    assert(StateStore.readPointer(store) == ((2L, 1L)))
   }
 
   test("ST20: MemoryStream end-to-end — maintain folds micro-batches; trend reads match batch over everything ingested") {
@@ -120,9 +120,9 @@ class StreamingTrendSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-strend-ckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
-    val q = StreamingTrend.maintain(
-      mem.toDF().toDF("k", "ep"), Seq("k"), col("ep"), store, ckpt,
-      bucketSeconds = bucket).start()
+    val q = StateStore.maintain(mem.toDF().toDF("k", "ep"), ckpt)(
+      StreamingTrend.applyBatch(_, Seq("k"), col("ep"), store, _,
+        bucketSeconds = bucket)).start()
     try {
       mem.addData(rows.take(300): _*)
       q.processAllAvailable()
