@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   * native transport — ClickHouse HTTP JSONEachRow inserts, one POST
   * per partition per micro-batch (clickhouse.go:26-70 semantics via
   * [[ClickHouseHttp]]); `--sink jdbc` is ClickHouse-over-JDBC batched
-  * per micro-batch; `--sink parquet:<dir>` is a database-free run.
-  * Metrics mirror the reference's four Prometheus quantities via
-  * IngestionMetrics, dumped at shutdown (ST9). `--otlp [endpoint]`
+  * per micro-batch; `--sink parquet:<dir>` is a database-free run; any
+  * other value is rejected by [[parse]]. `/metrics` on `--metrics-port`
+  * serves the reference's Prometheus quantities (listener + sink,
+  * [[MetricsServer.render]]), and the same text is printed at
+  * shutdown (ST9). `--otlp [endpoint]`
   * turns on real OTLP/HTTP span export per micro-batch, defaulting
   * the endpoint from OTEL_EXPORTER_OTLP_ENDPOINT else localhost:4318
   * — the reference runs both by default (cmd/root.go:99-148,
@@ -96,6 +98,7 @@ object IngestorCli {
       i += 2
     }
     if (argv.lastOption.contains("--otlp")) a = a.copy(otlp = Some(""))
+    Sinks.parse(a.sink, a.cfg) // an unknown --sink fails here, not at the first batch
     a
   }
 
@@ -147,6 +150,7 @@ object IngestorCli {
     * callers/specs can assert the four reference quantities (ST9).
     */
   def run(spark: SparkSession, a: Args): IngestionMetrics = {
+    val sink = Sinks.parse(a.sink, a.cfg)
     if (a.mode == "curate") {
       // batch job — no stream, no listener; the summary line is the
       // observability surface. --otlp has no effect here (span export
@@ -154,9 +158,10 @@ object IngestorCli {
       // silently ignoring the flag
       if (a.otlp.isDefined) System.err.println(
         "[ingestor] --otlp is ignored in curate mode (no streaming spans)")
-      val outDir =
-        if (a.sink.startsWith("parquet:")) a.sink.stripPrefix("parquet:")
-        else sys.error(s"curate mode writes parquet only, got: ${a.sink}")
+      val outDir = sink match {
+        case Sinks.Parquet(dir) => dir
+        case _ => sys.error(s"curate mode writes parquet only, got: ${a.sink}")
+      }
       curate(spark, a.input, outDir)
       // placeholder for the batch arm: never registered as a listener,
       // all counters zero — NOT a measured-empty streaming run
@@ -210,27 +215,11 @@ object IngestorCli {
       case other => sys.error(s"unknown mode: $other (synthetic|cdc|curate)")
     }
 
-    val writer =
-      if (a.sink.startsWith("parquet:"))
-        Sinks.parquetAppend(rows, a.checkpoint, a.sink.stripPrefix("parquet:"))
-      else if (a.sink == "clickhouse" || a.sink.startsWith("clickhouse:")) {
-        // the reference's native transport: HTTP JSONEachRow inserts.
-        // `--sink clickhouse` takes the host from --clickhouse-host /
-        // CLICKHOUSE_HOST; `--sink clickhouse:<host[:port]>` overrides.
-        val argHost = a.sink.stripPrefix("clickhouse").stripPrefix(":")
-        val host = if (argHost.isEmpty) a.cfg.host else argHost
-        ClickHouseHttp.append(rows, a.checkpoint,
-          ClickHouseHttp(host, a.cfg.database, a.cfg.table, a.cfg.user, a.cfg.password,
-            acc = Some(SinkAccumulators(spark.sparkContext))))
-      } else
-        Sinks.jdbcAppend(rows, a.checkpoint, a.cfg.jdbcUrl, a.cfg.tableOrDefault,
-          extraOptions = a.cfg.jdbcAuthOptions)
-
     // fork-free checkpoint log writes on `file:` checkpoints for the
     // query's whole life, unless the session already names its own
     // checkpoint file manager
     val query = LocalCheckpointFileManager.registeredFor(spark) {
-      val q = writer.start()
+      val q = Sinks.append(rows, a.checkpoint, sink).start()
       if (a.mode == "synthetic") {
         // bounded run then park (reference semantics, cmd/root.go:143-146):
         // here "park" = clean stop after the duration
@@ -248,18 +237,14 @@ object IngestorCli {
     }
     // the listener bus delivers asynchronously: without this barrier
     // the final micro-batches may be missing from the rendered counts
-    // (and gone for good — the listener is removed below). Id-form,
-    // not counter-form: on a shared session an unrelated query's
-    // queued termination must not satisfy the wait. A false return
-    // (bus delayed past the timeout) is surfaced, not swallowed
+    // (and gone for good — the listener is removed below). A false
+    // return (bus delayed past the timeout) is surfaced, not swallowed
     if (!metrics.awaitTerminated(query.id, 10000L))
       System.err.println(
         s"[ingestor] WARN: listener bus did not deliver query ${query.id} " +
           "termination within 10s — rendered counts may be incomplete")
     otlpExporter.foreach(_.flush(5000)) // drain the async span queue
-    println(metrics.render())
-    if (a.sink == "clickhouse" || a.sink.startsWith("clickhouse:"))
-      println(ClickHouseHttp.render())
+    println(MetricsServer.render(metrics))
     metricsServer.foreach(_.stop())
     spark.streams.removeListener(metrics)
     metrics

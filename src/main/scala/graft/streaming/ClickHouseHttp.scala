@@ -8,34 +8,7 @@ import java.nio.charset.StandardCharsets
 import java.time.Duration
 import java.util.Base64
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.util.LongAccumulator
-
-/** Cluster-wide sink counters: Spark [[LongAccumulator]]s captured in
-  * the sink closure, so executor-side increments merge back to the
-  * driver on task completion — the piece the per-JVM statics can't do
-  * off local mode. Create once driver-side via
-  * [[SinkAccumulators.apply]] and pass to [[ClickHouseHttp]].
-  *
-  * Semantics: Spark merges accumulator updates from SUCCESSFUL tasks
-  * only, so these are COMMITTED counts — a failed-and-retried
-  * partition contributes exactly once (the statics, incremented
-  * per-attempt, double-count retries; the two views are complementary,
-  * not redundant). The same rule is why there is no `errors`
-  * accumulator: every sink error path throws and fails its task, so
-  * its update would always be discarded — error totals live in the
-  * per-executor statics (scrape each executor) and in Spark's own
-  * task-failure metrics.
-  */
-final case class SinkAccumulators(rows: LongAccumulator, posts: LongAccumulator)
-
-object SinkAccumulators {
-  def apply(sc: SparkContext): SinkAccumulators = SinkAccumulators(
-    sc.longAccumulator("clickhouse.rows_inserted"),
-    sc.longAccumulator("clickhouse.posts_total"))
-}
+import org.apache.spark.sql.DataFrame
 
 /** S5 concrete transport: the reference's ClickHouse HTTP JSONEachRow
   * insert (/root/reference/internal/ingestion/clickhouse.go:26-70 —
@@ -61,7 +34,8 @@ object SinkAccumulators {
   *
   * The case class is a plain serializable `String => Unit`, so it
   * ships to executors as a closure; the client and metrics live in the
-  * companion (per-JVM statics, never serialized).
+  * companion (per-JVM statics, never serialized). As a [[Sinks.Target]]
+  * it is the `--sink clickhouse[:<host[:port]>]` writer.
   *
   * Endpoint shape matches clickhouse.go:109-110 exactly:
   * `http://host:port/?database=<db>&query=INSERT%20INTO%20<table>%20FORMAT%20JSONEachRow`.
@@ -72,8 +46,7 @@ final case class ClickHouseHttp(
     table: String = "",
     user: String = "",
     password: String = "",
-    requestTimeoutMs: Long = 30000,
-    acc: Option[SinkAccumulators] = None) extends (String => Unit) with Serializable {
+    requestTimeoutMs: Long = 30000) extends (String => Unit) with Sinks.Target {
 
   private def cfg = IngestConfig(host = host, database = database, table = table)
 
@@ -108,11 +81,11 @@ final case class ClickHouseHttp(
     val resp =
       try ClickHouseHttp.client.send(b.build(), HttpResponse.BodyHandlers.ofString())
       catch { case e: Exception =>
-        ClickHouseHttp.observe(System.nanoTime() - t0)
+        ClickHouseHttp.latency.observe(System.nanoTime() - t0)
         ClickHouseHttp.insertErrors.incrementAndGet()
         throw new IOException(s"http post error: ${e.getMessage}", e)
       }
-    ClickHouseHttp.observe(System.nanoTime() - t0)
+    ClickHouseHttp.latency.observe(System.nanoTime() - t0)
     if (resp.statusCode() != 200) {
       ClickHouseHttp.insertErrors.incrementAndGet()
       throw new IOException(
@@ -123,8 +96,17 @@ final case class ClickHouseHttp(
     // POST carries a whole partition, so count actual JSON lines
     val rows = body.count(_ == '\n') + 1L
     ClickHouseHttp.rowsInserted.addAndGet(rows)
-    acc.foreach { a => a.posts.add(1L); a.rows.add(rows) }
   }
+
+  /** The full S5 streaming path over this transport: JSONEachRow wire
+    * bytes → one POST per non-empty partition per micro-batch. A failed
+    * POST fails the batch, and under `local[*]` the query with it (no
+    * task retries). Restarting from the checkpoint replays the whole
+    * batch, re-POSTing partitions that had already landed. The
+    * versioned engine (`_lsn`) absorbs the replay for `app.users_cur`,
+    * the reference's contract; an append-only table counts it twice.
+    */
+  override def write(valid: DataFrame): Unit = Sinks.jsonEachRowPost(valid, this)
 }
 
 object ClickHouseHttp {
@@ -140,72 +122,30 @@ object ClickHouseHttp {
   // the reference's three sink metrics (internal/metrics/metrics.go:11-38):
   // clickhouse_insert_errors_total, rows_inserted, insert latency histogram.
   // SCOPE: per-JVM statics incremented where the POST runs (executors).
-  // In local mode driver == executor, so [[render]] served from the
-  // driver's MetricsServer sees them; in a multi-executor deployment
-  // the driver's copies stay zero — pass [[SinkAccumulators]] to the
-  // sink for cluster-wide counts (task-merged back to the driver),
-  // and treat the statics + latency histogram as per-executor detail
-  // for executor-side scrapes.
+  // In local mode driver == executor, so the driver's /metrics sees
+  // them; in a multi-executor deployment the driver's copies stay zero
+  // and each executor's statics are per-executor detail.
   val insertErrors = new AtomicLong(0L)
   val rowsInserted = new AtomicLong(0L)
   val postsTotal = new AtomicLong(0L)
 
-  /** Prometheus DefBuckets in seconds (metrics.go uses the default
-    * histogram buckets), stored non-cumulative with one overflow cell.
+  /** POST latency (every attempt) in ns, rendered in seconds on
+    * Prometheus DefBuckets (metrics.go uses the default buckets).
     */
-  val latencyBoundsSec: Array[Double] =
-    Array(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1, 2.5, 5, 10)
-  val latencyBuckets: Array[AtomicLong] =
-    Array.fill(latencyBoundsSec.length + 1)(new AtomicLong(0L))
-  val latencySumNanos = new AtomicLong(0L)
-
-  private[graft] def observe(nanos: Long): Unit = {
-    val sec = nanos / 1e9
-    val idx = latencyBoundsSec.indexWhere(sec <= _) match {
-      case -1 => latencyBoundsSec.length
-      case i => i
-    }
-    latencyBuckets(idx).incrementAndGet()
-    latencySumNanos.addAndGet(nanos)
-  }
+  val latency = new PromHistogram(
+    "clickhouse_insert_latency_seconds", PromHistogram.defBuckets(1000000000L), 1e9)
+  val latencySumNanos: AtomicLong = latency.sum
 
   private[graft] def resetMetrics(): Unit = { // test isolation
-    insertErrors.set(0); rowsInserted.set(0); postsTotal.set(0)
-    latencyBuckets.foreach(_.set(0)); latencySumNanos.set(0)
+    insertErrors.set(0); rowsInserted.set(0); postsTotal.set(0); latency.reset()
   }
 
   /** Prometheus text form of the sink counters, same 0.0.4 shape as
-    * [[IngestionMetrics.render]] — serve both from one [[MetricsServer]].
+    * [[IngestionMetrics.render]]; [[MetricsServer]] serves both.
     */
-  def render(): String = {
-    val counts = latencyBuckets.map(_.get)
-    val cumulative = counts.scanLeft(0L)(_ + _).tail
-    val total = cumulative.last
-    val hist = latencyBoundsSec.zipWithIndex
-      .map { case (bnd, i) => s"""clickhouse_insert_latency_seconds_bucket{le="$bnd"} ${cumulative(i)}""" }
-      .mkString("\n")
+  def render(): String =
     s"""clickhouse_insert_errors_total ${insertErrors.get}
        |rows_inserted ${rowsInserted.get}
        |clickhouse_posts_total ${postsTotal.get}
-       |$hist
-       |clickhouse_insert_latency_seconds_bucket{le="+Inf"} $total
-       |clickhouse_insert_latency_seconds_count $total
-       |clickhouse_insert_latency_seconds_sum ${latencySumNanos.get / 1e9}""".stripMargin
-  }
-
-  /** The full S5 streaming path over this transport: translate rows →
-    * JSONEachRow wire bytes → one POST per non-empty partition per
-    * micro-batch. Checkpointed, at-least-once across restarts: a failed
-    * POST fails the batch, and under `local[*]` the query with it (no
-    * task retries). Restarting from the checkpoint replays the whole
-    * batch, re-POSTing partitions that had already landed. The
-    * versioned engine (`_lsn`) absorbs the replay for `app.users_cur`,
-    * the reference's contract; an append-only table counts it twice.
-    */
-  def append(writer: DataFrame, checkpoint: String, sink: ClickHouseHttp): DataStreamWriter[Row] =
-    writer.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Sinks.jsonEachRowPost(Sinks.validRows(batch), sink)
-      }
+       |${latency.render()}""".stripMargin
 }

@@ -13,10 +13,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *   insert latency  ← batch durationMs (histogram buckets below)
   *   errors          ← onQueryTerminated with exception
   *   rate            ← processedRowsPerSecond (gauge)
-  * Attach with `spark.streams.addListener(new IngestionMetrics)`; a
-  * Prometheus scrape surface is Spark's own servlet
-  * (spark.ui.prometheus.enabled) — this listener is the engine-level
-  * mirror of the reference's counters, queryable in-process.
+  * Attach with `spark.streams.addListener(new IngestionMetrics)`. The
+  * scrape surface is [[MetricsServer]]'s `/metrics`, which serves these
+  * series next to the [[ClickHouseHttp]] sink's.
   *
   * Traces (reference: internal/tracing/tracing.go:19-51 — an OTel
   * span per insert): every micro-batch emits ONE span. Two sinks:
@@ -36,18 +35,10 @@ class IngestionMetrics(
   val errorsTotal = new AtomicLong(0L)
   val lastRowsPerSecond = new AtomicReference[Double](0.0)
 
-  /** Prometheus-DefBuckets-shaped latency histogram (5ms..10s),
-    * matching the reference's insert-latency buckets
-    * (internal/metrics/metrics.go:18-24). `latencyBuckets(i)` holds the
-    * NON-cumulative count for bucket i (one extra overflow cell at the
-    * end); [[render]] emits the Prometheus text form, where `le`
-    * buckets are CUMULATIVE and `+Inf` equals `_count`.
+  /** Micro-batch `triggerExecution` time in ms, on the reference's
+    * insert-latency buckets (internal/metrics/metrics.go:18-24).
     */
-  val bucketBoundsMs: Array[Long] =
-    Array(5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000)
-  val latencyBuckets: Array[AtomicLong] =
-    Array.fill(bucketBoundsMs.length + 1)(new AtomicLong(0L))
-  val latencySumMs = new AtomicLong(0L)
+  val latency = new PromHistogram("ingest_batch_ms", PromHistogram.defBuckets(1000L))
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
 
@@ -57,12 +48,7 @@ class IngestionMetrics(
     batchesTotal.incrementAndGet()
     lastRowsPerSecond.set(p.processedRowsPerSecond)
     val ms = Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
-    val idx = bucketBoundsMs.indexWhere(ms <= _) match {
-      case -1 => bucketBoundsMs.length
-      case i => i
-    }
-    latencyBuckets(idx).incrementAndGet()
-    latencySumMs.addAndGet(ms)
+    latency.observe(ms)
     val span = IngestSpan(
       p.id.toString, p.runId.toString, p.batchId, p.numInputRows, ms, p.timestamp)
     spanSink(
@@ -72,90 +58,36 @@ class IngestionMetrics(
     spanExporter.foreach(_(span))
   }
 
-  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = synchronized {
     if (e.exception.isDefined) errorsTotal.incrementAndGet()
-    terminationsTotal.incrementAndGet()
-    val id = e.id.toString
-    terminated.computeIfAbsent(id, _ => new java.util.concurrent.CountDownLatch(1))
-      .countDown()
-    terminatedOrder.add(id)
-    // bound the map on a long-lived shared listener: never-awaited
-    // terminations are evicted oldest-first past the cap (an id in
-    // `terminatedOrder` has already terminated, so evicting it can
-    // only affect an awaiter arriving >maxTerminatedIds terminations
-    // late — not a real pattern; in-flight awaiters hold their latch
-    // reference and are unaffected)
-    while (terminated.size > maxTerminatedIds) {
-      val old = terminatedOrder.poll()
-      if (old == null) return
-      terminated.remove(old)
-    }
+    terminated += e.id
+    notifyAll()
   }
 
-  val terminationsTotal = new AtomicLong(0L)
-  private val maxTerminatedIds = 4096
-  private val terminated = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CountDownLatch]()
-  private val terminatedOrder =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  // ids whose termination this listener has seen: one listener serves
+  // one CLI run, so the set stays as small as the session's query count
+  private val terminated = scala.collection.mutable.Set.empty[java.util.UUID]
 
-  /** Block until `n` query-terminated events have been DELIVERED to
+  /** Block until `queryId`'s termination event has been DELIVERED to
     * this listener (not merely posted). The listener bus is FIFO per
-    * listener, so once the termination event has arrived every
-    * progress event of that query has too — callers that read the
-    * counters right after `query.stop()` race the async bus without
-    * this barrier.
+    * listener, so once it has arrived every progress event of that
+    * query has too. Id-addressed because on a shared session an
+    * unrelated query's termination may still be queued on the bus.
     */
-  def awaitTerminated(n: Long = 1L, timeoutMs: Long = 10000L): Boolean = {
+  def awaitTerminated(queryId: java.util.UUID, timeoutMs: Long): Boolean = synchronized {
     val deadline = System.currentTimeMillis + timeoutMs
-    while (terminationsTotal.get < n && System.currentTimeMillis < deadline)
-      Thread.sleep(20L)
-    terminationsTotal.get >= n
+    while (!terminated(queryId) && System.currentTimeMillis < deadline)
+      wait(math.max(1L, deadline - System.currentTimeMillis))
+    terminated(queryId)
   }
 
-  /** Id-addressed form of the barrier: waits for THIS query's
-    * termination event. On a shared session (the test suite, any app
-    * running several streams) the counter form can be satisfied by an
-    * unrelated query's termination still queued on the async bus —
-    * the id form cannot. Parks on a per-id CountDownLatch (no
-    * busy-poll); a successfully awaited id is removed from the map,
-    * which together with the eviction cap keeps the listener bounded
-    * over an arbitrarily long life.
+  /** Prometheus text-format 0.0.4 dump of the listener's series;
+    * [[MetricsServer.render]] adds the sink's.
     */
-  def awaitTerminated(queryId: java.util.UUID, timeoutMs: Long): Boolean = {
-    val id = queryId.toString
-    val latch = terminated.computeIfAbsent(
-      id, _ => new java.util.concurrent.CountDownLatch(1))
-    val ok = latch.await(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-    if (ok) terminated.remove(id)
-    // timed-out waits on queries that never terminate would otherwise
-    // pin their latch forever (eviction only drains ids that reached
-    // terminatedOrder); drop our own un-counted latch — remove(k, v)
-    // can't race away a latch the listener has since counted down and
-    // a later event for this id just re-creates one
-    else if (latch.getCount > 0) terminated.remove(id, latch)
-    ok
-  }
-
-  /** Prometheus text-format 0.0.4 dump (scrape/debug surface): `le`
-    * buckets are cumulative, `+Inf` == `_count`, plus `_sum` — the
-    * exact shape promhttp serves for the reference's real
-    * `prometheus.Histogram`.
-    */
-  def render(): String = {
-    val counts = latencyBuckets.map(_.get)
-    val cumulative = counts.scanLeft(0L)(_ + _).tail
-    val total = cumulative.last
-    val hist = bucketBoundsMs.zipWithIndex
-      .map { case (b, i) => s"""ingest_batch_ms_bucket{le="$b"} ${cumulative(i)}""" }
-      .mkString("\n")
+  def render(): String =
     s"""ingest_rows_total ${rowsTotal.get}
        |ingest_batches_total ${batchesTotal.get}
        |ingest_errors_total ${errorsTotal.get}
        |ingest_rows_per_second ${lastRowsPerSecond.get}
-       |$hist
-       |ingest_batch_ms_bucket{le="+Inf"} $total
-       |ingest_batch_ms_count $total
-       |ingest_batch_ms_sum ${latencySumMs.get}""".stripMargin
-  }
+       |${latency.render()}""".stripMargin
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.pipeline.Debezium
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.pipeline.{Debezium, IngestConfig}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** S5/ST3: the reference's ClickHouse sink re-expressed as
   * `foreachBatch` (SURVEY.md §2.1 S5, §4.3).
@@ -43,55 +42,66 @@ object Sinks {
       if (it.hasNext) post(it.map(_.getString(0)).mkString("\n"))
     }
 
-  /** S5: foreachBatch append to a JDBC table (ClickHouse in the
-    * reference deployment; any JDBC URL works — BASELINE.json's
-    * "Structured Streaming + JDBC sink"). Batched, connection-pooled
-    * by the JDBC driver. A failed write fails the batch; under the CLI
-    * default `local[*]` a task is never retried, so the query stops.
-    * The batch is replayed only on restart from the checkpoint, and
-    * rows that had already landed land again: idempotent downstream
-    * only where `_lsn` versioning (ST3) applies, as on `app.users_cur`,
-    * never on an append-only table such as `events_db.events`.
+  /** Where a micro-batch's valid rows land: one of the three `--sink`
+    * targets ([[Parquet]], [[Jdbc]], [[ClickHouseHttp]]).
     */
-  def jdbcAppend(
-      writer: DataFrame, checkpoint: String,
-      url: String, table: String, batchSize: Int = 10000,
-      extraOptions: Map[String, String] = Map.empty): DataStreamWriter[Row] =
-    writer.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        validRows(batch).write
-          .format("jdbc")
-          .option("url", url)
-          .option("dbtable", table)
-          .option("batchsize", batchSize)
-          .options(extraOptions) // e.g. basic-auth user/password
-          .mode(SaveMode.Append)
-          .save()
-      }
-
-  /** Test/local stand-in: foreachBatch append to parquet — identical
-    * batch semantics without a database (SURVEY.md §5.2#4).
-    */
-  def parquetAppend(writer: DataFrame, checkpoint: String, outDir: String): DataStreamWriter[Row] =
-    writer.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        validRows(batch).write.mode(SaveMode.Append).parquet(outDir)
-      }
-
-  /** Start + await helper for bounded test runs: waits for all
-    * currently-available data, but never longer than `ms` (a
-    * continuous source would make processAllAvailable wait forever —
-    * the bound is the point of this helper).
-    */
-  def runFor(w: DataStreamWriter[Row], ms: Long): Unit = {
-    val q: StreamingQuery = w.start()
-    try {
-      val waiter = new Thread(() => try q.processAllAvailable() catch { case _: Throwable => () })
-      waiter.setDaemon(true)
-      waiter.start()
-      waiter.join(ms)
-    } finally if (q.isActive) q.stop()
+  trait Target extends Serializable {
+    def write(valid: DataFrame): Unit
   }
+
+  /** Test/local stand-in: parquet append — identical batch semantics
+    * without a database (SURVEY.md §5.2#4).
+    */
+  final case class Parquet(dir: String) extends Target {
+    override def write(valid: DataFrame): Unit = valid.write.mode(SaveMode.Append).parquet(dir)
+  }
+
+  /** S5: append to a JDBC table (ClickHouse in the reference
+    * deployment; any JDBC URL works — BASELINE.json's "Structured
+    * Streaming + JDBC sink"). Batched, connection-pooled by the JDBC
+    * driver. A failed write fails the batch; under the CLI default
+    * `local[*]` a task is never retried, so the query stops. The batch
+    * is replayed only on restart from the checkpoint, and rows that had
+    * already landed land again: idempotent downstream only where `_lsn`
+    * versioning (ST3) applies, as on `app.users_cur`, never on an
+    * append-only table such as `events_db.events`.
+    */
+  final case class Jdbc(
+      url: String, table: String, batchSize: Int = 10000,
+      extraOptions: Map[String, String] = Map.empty) extends Target {
+    override def write(valid: DataFrame): Unit =
+      valid.write
+        .format("jdbc")
+        .option("url", url)
+        .option("dbtable", table)
+        .option("batchsize", batchSize)
+        .options(extraOptions) // e.g. basic-auth user/password
+        .mode(SaveMode.Append)
+        .save()
+  }
+
+  /** The `--sink` value as a [[Target]]: `parquet:<dir>`,
+    * `clickhouse[:<host[:port]>]` (no host: `cfg.host`) or `jdbc`
+    * (`cfg.jdbcUrl`). Anything else is rejected here rather than at the
+    * first micro-batch.
+    */
+  def parse(sink: String, cfg: IngestConfig): Target = sink match {
+    case s if s.startsWith("parquet:") => Parquet(s.stripPrefix("parquet:"))
+    case s if s == "clickhouse" || s.startsWith("clickhouse:") =>
+      // the reference's native transport: HTTP JSONEachRow inserts
+      val argHost = s.stripPrefix("clickhouse").stripPrefix(":")
+      ClickHouseHttp(if (argHost.isEmpty) cfg.host else argHost,
+        cfg.database, cfg.table, cfg.user, cfg.password)
+    case "jdbc" => Jdbc(cfg.jdbcUrl, cfg.tableOrDefault, extraOptions = cfg.jdbcAuthOptions)
+    case other => throw new IllegalArgumentException(
+      s"unknown --sink '$other': expected parquet:<dir>, clickhouse[:<host[:port]>] or jdbc")
+  }
+
+  /** The one streaming writer every target shares: checkpointed
+    * `foreachBatch` of the batch's [[validRows]] into `target`.
+    */
+  def append(rows: DataFrame, checkpoint: String, target: Target): DataStreamWriter[Row] =
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) => target.write(validRows(batch)) }
 }

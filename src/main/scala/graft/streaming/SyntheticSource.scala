@@ -54,19 +54,14 @@ object SyntheticSource {
           pmod(col("value"), lit(actions.size)).cast("int") + 1).as("action"),
         lit("example-payload").as("payload"))
 
-  /** ST1 bounded run: start the query, let it generate for
-    * `durationMs`, stop — the reference's `--duration` contract
+  /** ST1 bounded run: let the started query generate for
+    * `durationMs`, drain, stop — the reference's `--duration` contract
     * (cmd/root.go:143-146); "park forever" maps to the driver process
-    * staying alive after stop().
+    * staying alive after stop(). `durationMs = 0` is the bounded drain
+    * of whatever is available now (specs over a MemoryStream).
     */
-  def runBounded(query: StreamingQuery, durationMs: Long): Unit =
-    runBounded(query, durationMs, drainGraceMs = 10000L)
-
-  /** As [[runBounded]], with the drain watchdog's grace period a
-    * parameter (tests shorten it; long production runs may widen it
-    * proportionally to `durationMs`).
-    */
-  def runBounded(query: StreamingQuery, durationMs: Long, drainGraceMs: Long): Unit = {
+  def runBounded(query: StreamingQuery, durationMs: Long): Unit = {
+    val drainGraceMs = 10000L
     val deadline = System.currentTimeMillis() + durationMs
     while (System.currentTimeMillis() < deadline && query.isActive)
       Thread.sleep(Math.min(100L, Math.max(1L, deadline - System.currentTimeMillis())))

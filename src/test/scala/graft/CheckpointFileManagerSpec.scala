@@ -1,23 +1,22 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path => NioPath}
+import java.nio.file.{Files, Path => NioPath, Paths => NioPaths}
 import graft.streaming.LocalCheckpointFileManager
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The atomic-publish contract Structured Streaming's logs rely on
   * (HDFSMetadataLog, CompactibleFileStreamLog, state-store deltas),
   * held by [[LocalCheckpointFileManager]] on `file:` checkpoints.
   */
-class CheckpointFileManagerSpec extends AnyFunSuite {
+class CheckpointFileManagerSpec extends SparkSpec {
 
   private val conf = new Configuration()
 
   private def fixture(): (NioPath, LocalCheckpointFileManager) = {
-    val dir = Files.createTempDirectory("graft-ckpt-fm")
+    val dir = NioPaths.get(tempDir("graft-ckpt-fm"))
     (dir, new LocalCheckpointFileManager(new Path(dir.toUri), conf))
   }
   private def names(dir: NioPath): Set[String] = {
@@ -133,7 +132,7 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("createCheckpointDirectory returns the qualified file: root and creates it") {
-    val dir = Files.createTempDirectory("graft-ckpt-root")
+    val dir = NioPaths.get(tempDir("graft-ckpt-root"))
     val root = dir.resolve("ckpt")
     val m = new LocalCheckpointFileManager(new Path(root.toString), conf)
     val q = m.createCheckpointDirectory()

@@ -2,10 +2,9 @@ package graft
 
 import java.io.IOException
 import java.net.InetSocketAddress
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.streaming.{ClickHouseHttp, SinkAccumulators, Sinks}
+import graft.streaming.{ClickHouseHttp, Sinks}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -70,7 +69,7 @@ class ClickHouseHttpSpec extends SparkSpec {
       assert(ClickHouseHttp.postsTotal.get === 2L)
       assert(ClickHouseHttp.insertErrors.get === 0L)
       // every attempt lands one latency observation
-      assert(ClickHouseHttp.latencyBuckets.map(_.get).sum === 2L)
+      assert(ClickHouseHttp.latency.count === 2L)
     }
   }
 
@@ -86,7 +85,7 @@ class ClickHouseHttpSpec extends SparkSpec {
     intercept[IOException] { ClickHouseHttp(host = "127.0.0.1:1")("{}") }
     assert(ClickHouseHttp.insertErrors.get === 2L)
     assert(ClickHouseHttp.rowsInserted.get === 0L)
-    assert(ClickHouseHttp.latencyBuckets.map(_.get).sum === 2L)
+    assert(ClickHouseHttp.latency.count === 2L)
   }
 
   test("streaming append POSTs every micro-batch as JSONEachRow partitions (S5 end-to-end)") {
@@ -95,10 +94,10 @@ class ClickHouseHttpSpec extends SparkSpec {
       implicit val sq = spark.sqlContext
       val in = MemoryStream[(Long, String, String, Int, Int, Long, java.sql.Timestamp)]
       val rows = in.toDF().toDF("id", "name", "email", "is_deleted", "_op", "_lsn", "_ts")
-      val ckpt = Files.createTempDirectory("ch-ckpt").toString
+      val ckpt = tempDir("ch-ckpt")
       val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05")
       in.addData((1L, "n1", "e1", 0, 1, 10L, ts), (2L, "n2", "e2", 1, 3, 20L, ts))
-      Sinks.runFor(ClickHouseHttp.append(rows, ckpt, ClickHouseHttp(s"127.0.0.1:$port")), 20000)
+      drain(Sinks.append(rows, ckpt, ClickHouseHttp(s"127.0.0.1:$port")))
       val lines = reqs.asScala.flatMap(_.body.split('\n')).toSet
       assert(lines === Set(
         """{"id":1,"name":"n1","email":"e1","is_deleted":0,"_op":1,"_lsn":10,"_ts":"2024-01-02 03:04:05"}""",
@@ -138,41 +137,9 @@ class ClickHouseHttpSpec extends SparkSpec {
     }
   }
 
-  test("SinkAccumulators merge executor-side counts back to the driver") {
-    ClickHouseHttp.resetMetrics()
-    withStub(200) { (port, reqs) =>
-      val acc = SinkAccumulators(spark.sparkContext)
-      val sink = ClickHouseHttp(host = s"127.0.0.1:$port", acc = Some(acc))
-      val df = spark.range(0, 30, 1, numPartitions = 3).selectExpr(
-        "id", "concat('n', id) as name", "concat('e', id) as email",
-        "cast(0 as int) as is_deleted", "cast(1 as int) as _op", "id as _lsn",
-        "timestamp'2024-01-02 03:04:05' as _ts")
-      Sinks.jsonEachRowPost(df, sink)
-      // DRIVER-side accumulator values: exactly what a multi-executor
-      // deployment reports (statics would stay zero off local mode)
-      assert(acc.rows.value === 30L)
-      assert(acc.posts.value === 3L)
-      assert(reqs.size === 3)
-    }
-    withStub(500) { (port, _) =>
-      val acc = SinkAccumulators(spark.sparkContext)
-      val sink = ClickHouseHttp(host = s"127.0.0.1:$port", acc = Some(acc))
-      intercept[Exception] {
-        val df = spark.range(0, 4, 1, numPartitions = 1).selectExpr(
-          "id", "concat('n', id) as name", "concat('e', id) as email",
-          "cast(0 as int) as is_deleted", "cast(1 as int) as _op", "id as _lsn",
-          "timestamp'2024-01-02 03:04:05' as _ts")
-        Sinks.jsonEachRowPost(df, sink)
-      }
-      // committed-count contract: updates from FAILED tasks are
-      // discarded, so a failed partition contributes nothing
-      assert(acc.rows.value === 0L && acc.posts.value === 0L)
-    }
-  }
-
   test("render() emits cumulative le buckets and the reference counter names") {
     ClickHouseHttp.resetMetrics()
-    ClickHouseHttp.observe(7L * 1000 * 1000) // 7ms → le=0.01 bucket
+    ClickHouseHttp.latency.observe(7L * 1000 * 1000) // 7ms → le=0.01 bucket
     ClickHouseHttp.insertErrors.incrementAndGet()
     val r = ClickHouseHttp.render()
     assert(r.linesIterator.exists(_ == "clickhouse_insert_errors_total 1"))

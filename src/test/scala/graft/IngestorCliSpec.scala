@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.streaming.{ClickHouseHttp, LocalCheckpointFileManager}
+import graft.streaming.{ClickHouseHttp, LocalCheckpointFileManager, Sinks}
 import scala.jdk.CollectionConverters._
 
 /** CLI flag/env parsing mirrors the reference's cobra surface
@@ -55,6 +55,19 @@ class IngestorCliSpec extends SparkSpec {
     assert(IngestorCli.parse(Array.empty).otlp === None)
   }
 
+  test("an unknown --sink is rejected at parse, naming the accepted forms") {
+    val e = intercept[IllegalArgumentException](IngestorCli.parse(Array("--sink", "clikhouse:ch1")))
+    Seq("clikhouse:ch1", "parquet:<dir>", "clickhouse[:<host[:port]>]", "jdbc")
+      .foreach(f => assert(e.getMessage.contains(f), e.getMessage))
+    // each accepted form parses to its one writer
+    val a = IngestorCli.parse(Array("--sink", "jdbc", "--clickhouse-host", "ch.prod",
+      "--clickhouse-db", "db", "--clickhouse-table", "t"))
+    assert(Sinks.parse(a.sink, a.cfg) === Sinks.Jdbc("jdbc:clickhouse://ch.prod:8123/db", "t"))
+    assert(Sinks.parse("clickhouse", a.cfg) === ClickHouseHttp("ch.prod", "db", "t"))
+    assert(Sinks.parse("clickhouse:ch1:9000", a.cfg) === ClickHouseHttp("ch1:9000", "db", "t"))
+    assert(Sinks.parse("parquet:/tmp/x", a.cfg) === Sinks.Parquet("/tmp/x"))
+  }
+
   test("synthetic run end-to-end: rows POST to stub ClickHouse, spans to stub OTLP collector") {
     val chBodies = new ConcurrentLinkedQueue[String]()
     val ch = HttpServer.create(new InetSocketAddress(0), 0)
@@ -76,7 +89,7 @@ class IngestorCliSpec extends SparkSpec {
     otlp.start()
     try {
       ClickHouseHttp.resetMetrics()
-      val dir = Files.createTempDirectory("graft-cli-e2e").toString
+      val dir = tempDir("graft-cli-e2e")
       IngestorCli.run(spark, IngestorCli.Args(
         mode = "synthetic", rate = 50L, durationS = 3L,
         cfg = graft.pipeline.IngestConfig(metricsPort = 0),
@@ -96,7 +109,7 @@ class IngestorCliSpec extends SparkSpec {
   }
 
   test("cdc run end-to-end via file transport: envelope dir → translate → parquet, metrics counted") {
-    val dir = Files.createTempDirectory("graft-cli-cdc").toString
+    val dir = tempDir("graft-cli-cdc")
     val topicDir = s"$dir/topic"
     Files.createDirectories(java.nio.file.Paths.get(topicDir))
     // a mixed fixture exercising every translate arm (cdc.go:100-143):
@@ -147,7 +160,7 @@ class IngestorCliSpec extends SparkSpec {
     * registered one.
     */
   private def restartDrainsOnlyNewFiles(firstManager: Option[String]): Unit = {
-    val dir = Files.createTempDirectory("graft-cli-restart").toString
+    val dir = tempDir("graft-cli-restart")
     val topic = java.nio.file.Paths.get(dir, "topic")
     Files.createDirectories(topic)
     def addFiles(tag: String, ids: Seq[Range]): Unit = ids.zipWithIndex.foreach { case (r, i) =>
@@ -224,7 +237,7 @@ class IngestorCliSpec extends SparkSpec {
 
   test("curate mode: documents dir → 4-stage pipeline → packed parquet") {
     requireTestdata()
-    val dir = Files.createTempDirectory("graft-cli-curate").toString
+    val dir = tempDir("graft-cli-curate")
     val out = s"$dir/packed"
     val (docsIn, docsOut) = {
       val a = IngestorCli.parse(Array(

@@ -12,12 +12,10 @@ class ObservabilitySpec extends AnyFunSuite {
 
   test("latency histogram renders CUMULATIVE le buckets with +Inf == _count, plus _sum") {
     val m = new IngestionMetrics
-    assert(m.bucketBoundsMs.toSeq === Seq(5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000))
-    assert(m.bucketBoundsMs.sliding(2).forall(p => p(0) < p(1)))
+    assert(m.latency.bounds.toSeq === Seq(5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000))
+    assert(m.latency.bounds.sliding(2).forall(p => p(0) < p(1)))
     // two obs in bucket 0 (<=5ms), one in bucket 2 (<=25ms), one overflow
-    m.latencyBuckets(0).set(2); m.latencyBuckets(2).set(1)
-    m.latencyBuckets(m.bucketBoundsMs.length).set(1)
-    m.latencySumMs.set(3 + 2 + 20 + 60000)
+    Seq(3L, 2L, 20L, 60000L).foreach(m.latency.observe)
     val r = m.render()
     def bucket(le: String): Long =
       r.linesIterator.find(_.startsWith(s"""ingest_batch_ms_bucket{le="$le"}"""))
@@ -29,8 +27,8 @@ class ObservabilitySpec extends AnyFunSuite {
     assert(bucket("10000") === 3)
     assert(bucket("+Inf") === 4) // total including overflow, == _count
     assert(r.linesIterator.exists(_ == "ingest_batch_ms_count 4"))
-    assert(r.linesIterator.exists(_ == s"ingest_batch_ms_sum ${m.latencySumMs.get}"))
-    val cum = m.bucketBoundsMs.map(b => bucket(b.toString))
+    assert(r.linesIterator.exists(_ == "ingest_batch_ms_sum 60025"))
+    val cum = m.latency.bounds.map(b => bucket(b.toString))
     assert(cum.sliding(2).forall(p => p(0) <= p(1)), "le buckets must be monotone")
     assert(r.linesIterator.count(_.startsWith("ingest_batch_ms_bucket")) === 12)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.streaming.Sinks
 import graft.sources.Sources
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,10 +20,10 @@ class SourcesSinksJdbcSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(java.lang.Long, java.lang.Long, String)]
     val rows = in.toDF().toDF("id", "_lsn", "name")
-    val ckpt = Files.createTempDirectory("jdbc-ckpt").toString
-    val w = Sinks.jdbcAppend(rows, ckpt, url, "users_cur", batchSize = 100)
+    val ckpt = tempDir("jdbc-ckpt")
+    val w = Sinks.append(rows, ckpt, Sinks.Jdbc(url, "users_cur", batchSize = 100))
     in.addData((1L, 10L, "a"), (2L, 20L, "b"), (null, 30L, "bad-id"))
-    Sinks.runFor(w, 20000)
+    drain(w)
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "users_cur").load()
     assert(back.count() === 2)

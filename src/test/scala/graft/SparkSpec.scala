@@ -1,13 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+import graft.streaming.{StateStore, SyntheticSource}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (SURVEY.md §5.2#2). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  override def afterAll(): Unit = () // session shared across suites
+
+  // the session is shared across suites; the suite's temp dirs are not
+  private var tempRoot: Option[Path] = None
+  override def afterAll(): Unit = tempRoot.foreach(StateStore.deleteTree)
+
+  /** A fresh directory under this suite's temp root, deleted with the
+    * root after the suite's last test.
+    */
+  protected def tempDir(prefix: String): String = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = Files.createTempDirectory(s"graft-${getClass.getSimpleName}")
+      tempRoot = Some(r)
+      r
+    }
+    Files.createTempDirectory(root, prefix).toString
+  }
+
+  /** Start `w` and drain what its source holds now, bounded like a
+    * `--duration` run's drain, then stop.
+    */
+  protected def drain(w: DataStreamWriter[Row]): Unit = SyntheticSource.runBounded(w.start(), 0L)
 
   /** Driver-generated parquet fixtures live outside the repo and are
     * absent on CI runners. Call as the first statement of any test

@@ -9,9 +9,7 @@ import scala.jdk.CollectionConverters._
 class StateStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val stores = Files.createTempDirectory("statestore")
-  private def store(): String = Files.createTempDirectory(stores, "s").toString
-  override def afterAll(): Unit = StateStore.deleteTree(stores)
+  private def store(): String = tempDir("s")
   private def pointerFile(dir: String) = Paths.get(dir, "_CURRENT")
   private def writePointerText(dir: String, text: String): Unit =
     Files.writeString(pointerFile(dir), text)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.streaming.{StreamingClusters, StreamingDedup}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -30,7 +29,7 @@ class StreamingClustersSpec extends SparkSpec {
   }
 
   test("X2-streaming: new docs adopt the stored cluster label across batches") {
-    val dir = Files.createTempDirectory("graft-sclusters").toString
+    val dir = tempDir("graft-sclusters")
     runBatches(dir)(
       Seq(1L -> docA, 2L -> docB),
       // 10 is a near-dup of stored doc 1 → label 1; 22 is novel → label 22
@@ -41,7 +40,7 @@ class StreamingClustersSpec extends SparkSpec {
   }
 
   test("X2-streaming: batch-internal components cluster before store assignment") {
-    val dir = Files.createTempDirectory("graft-sclusters2").toString
+    val dir = tempDir("graft-sclusters2")
     runBatches(dir)(
       // 20/21 are near-dups of each other within ONE batch: both take
       // the component min 20; 22 is its own singleton
@@ -59,7 +58,7 @@ class StreamingClustersSpec extends SparkSpec {
   private val seedR = "the quick brown fox jumps over the pig green and runs away fast"
 
   test("X2-streaming: a bridging doc records a merge edge; resolve + compact unify") {
-    val dir = Files.createTempDirectory("graft-sclusters3").toString
+    val dir = tempDir("graft-sclusters3")
     runBatches(dir)(
       // two separate clusters seeded in SEPARATE batches; their mutual
       // hamming exceeds maxHamming so cluster 5 genuinely exists
@@ -127,7 +126,7 @@ class StreamingClustersSpec extends SparkSpec {
         val k = 1 + rnd.nextInt(4)
         batches += rest.take(k); rest = rest.drop(k)
       }
-      val dir = Files.createTempDirectory(s"graft-scprop$seed").toString
+      val dir = tempDir(s"graft-scprop$seed")
       runBatches(dir)(batches.toSeq: _*)
       val store = s"$dir/store"
       // (a) exact agreement with the batch operator over the full corpus
@@ -163,7 +162,7 @@ class StreamingClustersSpec extends SparkSpec {
   }
 
   test("X2-streaming: label-store probe reads a pruned file subset") {
-    val dir = Files.createTempDirectory("graft-sclusters4").toString
+    val dir = tempDir("graft-sclusters4")
     runBatches(dir)(Seq(1L -> docA, 2L -> docB, 3L -> docC))
     val full = spark.read.schema(StreamingClusters.LabelStoreSchema)
       .parquet(s"$dir/store/v2")

@@ -33,7 +33,7 @@ class StreamingIvfSpec extends SparkSpec {
       np: Int = 4): Set[(Long, Long, Double, Long)] = {
     val (_, _, _, _, centVer) = StreamingIvf.readPointer(store)
     val cents = spark.read.parquet(s"$store/centroids-$centVer")
-    val idx = Files.createTempDirectory("graft-sivf-fresh").toString
+    val idx = tempDir("graft-sivf-fresh")
     Similarity.buildIvfIndex(
       vecsSlice(0L, upto).toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, centroids = cents)
@@ -44,7 +44,7 @@ class StreamingIvfSpec extends SparkSpec {
   }
 
   test("ST15: per-batch folds equal a fresh batch index on the frozen codebook bit-for-bit; replay no-op; crash heal; compact invariant") {
-    val store = Files.createTempDirectory("graft-sivf").toString
+    val store = tempDir("graft-sivf")
     // empty store: well-formed empty result
     assert(fromStore(store).isEmpty)
     // batch 0 trains the codebook and commits; parity after EACH commit
@@ -88,7 +88,7 @@ class StreamingIvfSpec extends SparkSpec {
   }
 
   test("ST15: retrain rebuilds the codebook over everything ingested, atomically; answers equal a fresh index on the NEW codebook") {
-    val store = Files.createTempDirectory("graft-sivf-rt").toString
+    val store = tempDir("graft-sivf-rt")
     StreamingIvf.applyBatch(
       vecsSlice(0L, 60L).toDF("vec_id", "embedding"),
       "vec_id", "embedding", store, batchId = 0L, nlist = 4, iters = 1)
@@ -133,7 +133,7 @@ class StreamingIvfSpec extends SparkSpec {
       spark, store, sQueries, "vid", "embedding", k = 3)
     // a STRING-id corpus: the pre-commit (crash-window) read carries
     // the string neighbor type, not a hardcoded one
-    val store = Files.createTempDirectory("graft-sivf-sid").toString
+    val store = tempDir("graft-sivf-sid")
     StreamingIvf.applyBatch(
       Seq(("d-1", Seq(1.0f, 0.0f)), ("d-2", Seq(0.0f, 1.0f)))
         .toDF("vid", "embedding"),
@@ -148,7 +148,7 @@ class StreamingIvfSpec extends SparkSpec {
     assert(shape(degenerate) === shape(committed))
     assert(degenerate.unionByName(committed).count() == committed.count())
     // a virgin store falls back to the QUERY side's id type
-    val virgin = Files.createTempDirectory("graft-sivf-virgin").toString
+    val virgin = tempDir("graft-sivf-virgin")
     assert(read(virgin).schema("neighbor_id").dataType === StringType)
     val lQueries = Seq((1L, Seq(1.0f, 0.0f))).toDF("vid", "embedding")
     assert(StreamingIvf.ivfTopKFromStore(spark, virgin, lQueries,
@@ -159,8 +159,8 @@ class StreamingIvfSpec extends SparkSpec {
   test("ST15: end-to-end through foreachBatch on a MemoryStream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val store = Files.createTempDirectory("graft-sivf-ms").toString
-    val ckpt = Files.createTempDirectory("graft-sivf-ck").toString
+    val store = tempDir("graft-sivf-ms")
+    val ckpt = tempDir("graft-sivf-ck")
     val rows = vecsSlice(0L, 120L)
     val in = MemoryStream[(Long, Seq[Float])]
     val q = StateStore.maintain(in.toDF().toDF("vec_id", "embedding"), ckpt)(

@@ -126,12 +126,12 @@ class StreamingSpec extends SparkSpec {
 
   test("S5: foreachBatch parquet sink filters invalid rows instead of failing the batch") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sink").toString
+    val dir = tempDir("graft-sink")
     val in = MemoryStream[(java.lang.Long, java.lang.Long, String)]
     val rows = in.toDF().toDF("id", "_lsn", "name")
-    val w = Sinks.parquetAppend(rows, s"$dir/ckpt", s"$dir/out")
+    val w = Sinks.append(rows, s"$dir/ckpt", Sinks.Parquet(s"$dir/out"))
     in.addData((1L, 10L, "ok"), (null, 11L, "bad-id"), (2L, null, "bad-lsn"))
-    Sinks.runFor(w, 10000)
+    drain(w)
     val out = spark.read.parquet(s"$dir/out").select("name").as[String].collect().toSet
     assert(out === Set("ok"))
   }
@@ -168,7 +168,7 @@ class StreamingSpec extends SparkSpec {
 
   test("X1-streaming: cross-batch dedup against the persistent fingerprint store") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sdedup").toString
+    val dir = tempDir("graft-sdedup")
     val in = MemoryStream[(Long, String)]
     val w = StreamingDedup.dedupAgainstStore(
       in.toDF().toDF("doc_id", "text"), "doc_id", "text",
@@ -200,7 +200,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("X1-streaming: pre-v2 flat fingerprint store migrates in place") {
-    val dir = Files.createTempDirectory("graft-sdedup-mig").toString
+    val dir = tempDir("graft-sdedup-mig")
     val store = s"$dir/store"
     // legacy layout: flat parquet of fps directly under storeDir
     Seq("00aa", "ffbb", "7c1d").toDF("fp").write.parquet(store)
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkSpec {
 
   test("X2-streaming: cross-batch NEAR-dup dedup against the SimHash signature store") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sneardup").toString
+    val dir = tempDir("graft-sneardup")
     val in = MemoryStream[(Long, String)]
     val w = StreamingDedup.nearDupAgainstStore(
       in.toDF().toDF("doc_id", "text"), "doc_id", "text", maxHamming = 12,
@@ -258,7 +258,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("X1-streaming: store compaction collapses micro-batch appends to one file per partition") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact")
     val store = s"$dir/store"
     // three "micro-batch" appends into the same two prefixes
     (1 to 3).foreach { i =>
@@ -281,7 +281,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("X2-streaming: interim band-partitioned signature store migrates to v2") {
-    val dir = Files.createTempDirectory("graft-sneardup-mig").toString
+    val dir = tempDir("graft-sneardup-mig")
     val store = s"$dir/store"
     // interim r4 layout: partitionBy("band") directly under storeDir
     Seq(("00110011", 5L, 9L, 0), ("11001100", 7L, 3L, 1))
@@ -310,7 +310,7 @@ class StreamingSpec extends SparkSpec {
     val x = v(i => math.cos(2 * i + 1))
     val xNear = v(i => math.cos(2 * i + 1) + (if (i == 1) 0.1 else 0.0))
     val y = v(i => math.sin(3 * i + 2) * (if (i % 2 == 0) 1 else -1))
-    val dir = Files.createTempDirectory("graft-svecdedup").toString
+    val dir = tempDir("graft-svecdedup")
     val in = MemoryStream[(Long, Seq[Float])]
     val w = StreamingDedup.embedDedupAgainstStore(
       in.toDF().toDF("doc_id", "embedding"), "doc_id", "embedding", minCos = 0.9,
@@ -357,7 +357,7 @@ class StreamingSpec extends SparkSpec {
       (102L, v(i => math.cos(2 * i + 1))),
       (103L, v(i => math.sin(3 * i + 2) * (if (i % 2 == 0) 1 else -1))))
       .toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft-sann").toString
+    val dir = tempDir("graft-sann")
     val in = MemoryStream[(Long, Seq[Float])]
     val w = StreamingAnn.serveTopK(
       in.toDF().toDF("vec_id", "embedding"), corpus, "vec_id", "embedding",
@@ -380,15 +380,15 @@ class StreamingSpec extends SparkSpec {
 
   test("S2→P1→S5 end-to-end: envelope JSON stream → translate → parquet sink") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-cdc-e2e").toString
+    val dir = tempDir("graft-cdc-e2e")
     val in = MemoryStream[(String, String)]
     val rows = CdcStreaming.translate(in.toDF().toDF("value", "key"))
-    val w = Sinks.parquetAppend(rows, s"$dir/ckpt", s"$dir/out")
+    val w = Sinks.append(rows, s"$dir/ckpt", Sinks.Parquet(s"$dir/out"))
     in.addData(
       ("""{"before":null,"after":{"id":1,"name":"a","email":"a@x"},"source":{"lsn":10,"ts_us":1},"op":"c","ts_us":1}""", """{"id":1}"""),
       ("not json", null),
       ("""{"before":{"id":1,"name":"a","email":"a@x"},"after":null,"source":{"lsn":11,"ts_us":2},"op":"d","ts_us":2}""", """{"id":1}"""))
-    Sinks.runFor(w, 10000)
+    drain(w)
     val out = spark.read.parquet(s"$dir/out")
       .select("id", "is_deleted", "_op", "_lsn")
       .as[(Long, Int, Int, Long)].collect().toSet
@@ -600,6 +600,10 @@ class StreamingSpec extends SparkSpec {
       val body = scala.io.Source.fromInputStream(url.openStream()).mkString
       assert(body.contains("ingest_rows_total 42"))
       assert(body.contains("""ingest_batch_ms_bucket{le="+Inf"}"""))
+      // the sink's series share the one scrape surface (metrics.go:40-57)
+      Seq("clickhouse_insert_errors_total", "rows_inserted", "clickhouse_insert_latency_seconds_count")
+        .foreach(series => assert(body.linesIterator.exists(_.startsWith(s"$series ")), body))
+      assert(body === MetricsServer.render(m))
     } finally srv.stop()
   }
 
@@ -901,7 +905,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST13: streaming SCD2 equals the batch operator across batches; replay + crash windows") {
-    val dir = Files.createTempDirectory("scd2st").toString
+    val dir = tempDir("scd2st")
     val all = Seq(
       (1L, 1L, 100L, false, "a"),
       (1L, 2L, 200L, false, "b"),
@@ -1008,8 +1012,8 @@ class StreamingSpec extends SparkSpec {
 
   test("ST-W9: streaming OHLC bars equal the batch resample over out-of-order input") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("ohlcst").toString
-    val ckpt = Files.createTempDirectory("ohlcck").toString
+    val dir = tempDir("ohlcst")
+    val ckpt = tempDir("ohlcck")
     // 240 rows, 3 symbols, 10 one-minute buckets, SHUFFLED — so every
     // micro-batch carries late rows for bars earlier batches opened,
     // and the merge's out-of-order claim is actually exercised
@@ -1063,8 +1067,8 @@ class StreamingSpec extends SparkSpec {
 
   test("ST-W1f: streaming collapse FINAL equals the batch operator over shuffled sign batches") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("collst").toString
-    val ckpt = Files.createTempDirectory("collck").toString
+    val dir = tempDir("collst")
+    val ckpt = tempDir("collck")
     // 40 keys × up to 5 states each: every state +1 is cancelled by a
     // -1 copy when its successor exists; keys ≡ 0 (mod 5) end deleted
     // (final cancel, no replacement). The whole stream is SHUFFLED so
@@ -1126,8 +1130,8 @@ class StreamingSpec extends SparkSpec {
 
   test("ST-W4d: streaming deltaSum equals batch over in-watermark disorder; closes slices, drops beyond-horizon rows, compacts") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("dsumst").toString
-    val ckpt = Files.createTempDirectory("dsumck").toString
+    val dir = tempDir("dsumst")
+    val ckpt = tempDir("dsumck")
     // two counters sampled every 10 s over 600 s; c1 resets twice.
     // Rows are shuffled WITHIN each micro-batch (disorder inside the
     // 120 s watermark delay) while batches advance in time — the
@@ -1212,7 +1216,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST13: redelivery-horizon prunes dead tombstones, keeps live ones blocking") {
-    val dir = Files.createTempDirectory("scd2hz").toString
+    val dir = tempDir("scd2hz")
     def df(rows: Seq[(Long, Long, Long, Boolean, String)]) =
       rows.toDF("id", "lsn", "ts", "del", "v")
     val tmpl = graft.operators.VersionedDedup.scd2History(
@@ -1256,8 +1260,8 @@ class StreamingSpec extends SparkSpec {
   test("ST-A27: streaming score monitor serves the batch AUC/KS over out-of-order batches") {
     import graft.operators.StatsAgg
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("scorest").toString
-    val ckpt = Files.createTempDirectory("scoreck").toString
+    val dir = tempDir("scorest")
+    val ckpt = tempDir("scoreck")
     // quantized (round-2) scores so the cell table is bounded — the
     // operator's documented contract; SHUFFLED so micro-batches carry
     // late rows for cells earlier batches opened
