@@ -4,6 +4,7 @@ import graft.pipeline.IngestConfig
 import graft.streaming._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** The reference's CLI surface, re-expressed (dual-mode ingestor —
   * /root/reference/cmd/root.go:39-60): `--mode synthetic` generates
@@ -57,8 +58,8 @@ object IngestorCli {
     def envOr(k: String, d: String) = sys.env.getOrElse(k, d)
     var a = Args(
       mode = envOr("MODE", "synthetic"),
-      rate = envOr("EVENT_RATE", "5").toLong,
-      durationS = envOr("INGESTION_DURATION", "60").toLong,
+      rate = positive("--rate", "EVENT_RATE", envOr("EVENT_RATE", "5")),
+      durationS = positive("--duration", "INGESTION_DURATION", envOr("INGESTION_DURATION", "60")),
       cfg = IngestConfig(
         host = envOr("CLICKHOUSE_HOST", "localhost"),
         database = envOr("CLICKHOUSE_DB", "appdb"),
@@ -75,8 +76,8 @@ object IngestorCli {
       val (k, v) = (argv(i), argv(i + 1))
       k match {
         case "--mode" => a = a.copy(mode = v.toLowerCase)
-        case "--rate" => a = a.copy(rate = v.toLong)
-        case "--duration" => a = a.copy(durationS = v.toLong)
+        case "--rate" => a = a.copy(rate = positive(k, "EVENT_RATE", v))
+        case "--duration" => a = a.copy(durationS = positive(k, "INGESTION_DURATION", v))
         case "--brokers" => a = a.copy(cfg = a.cfg.copy(brokers = IngestConfig.splitCsv(v)))
         case "--topic" => a = a.copy(cfg = a.cfg.copy(topic = v))
         case "--group" => a = a.copy(cfg = a.cfg.copy(groupId = v))
@@ -101,6 +102,14 @@ object IngestorCli {
     Sinks.parse(a.sink, a.cfg) // an unknown --sink fails here, not at the first batch
     a
   }
+
+  /** `v` as a count > 0, else an error naming the flag and its env var:
+    * the rate source and `awaitTermination` would reject it only after
+    * the listener and `/metrics` are up.
+    */
+  private def positive(flag: String, env: String, v: String): Long =
+    v.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$flag ($env) must be a whole number > 0, got: $v"))
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
@@ -134,8 +143,8 @@ object IngestorCli {
 
   /** The file transport is a single-broker configuration by
     * definition: one decision shared by source selection AND the
-    * finite-drain branch, so a `file:` entry mixed into a multi-broker
-    * list fails loudly instead of half-taking each path.
+    * trigger, so a `file:` entry mixed into a multi-broker list fails
+    * loudly instead of half-taking each path.
     */
   private def fileBroker(a: Args): Option[String] = a.cfg.brokers match {
     case Seq(f) if f.startsWith("file:") => Some(f)
@@ -148,6 +157,14 @@ object IngestorCli {
     * seam (specs drive it against stub HTTP servers on a shared
     * session that must survive the run). Returns the run's metrics so
     * callers/specs can assert the four reference quantities (ST9).
+    *
+    * Every stream mode ends in `awaitTermination`, which rethrows a
+    * failed stream's `StreamingQueryException`: a synthetic run is
+    * stopped by [[SyntheticSource.runBounded]] after `--duration`, a
+    * `file:` drain stops itself once the files present at its start are
+    * sunk (`Trigger.AvailableNow`), and a Kafka stream runs until it is
+    * stopped or fails. Whatever the outcome, the listener is removed
+    * and `/metrics` is closed before `run` returns or throws.
     */
   def run(spark: SparkSession, a: Args): IngestionMetrics = {
     val sink = Sinks.parse(a.sink, a.cfg)
@@ -167,23 +184,6 @@ object IngestorCli {
       // all counters zero — NOT a measured-empty streaming run
       return new IngestionMetrics()
     }
-    // real OTLP/HTTP span export when --otlp is given (reference runs
-    // its otlptracehttp exporter unconditionally, tracing.go:19-51;
-    // here it is opt-in so a database-free local run needs no collector)
-    val otlpExporter = a.otlp.map {
-      case "" => new OtlpSpanExporter()
-      case ep => new OtlpSpanExporter(endpoint = ep)
-    }
-    val metrics = new IngestionMetrics(spanExporter = otlpExporter)
-    spark.streams.addListener(metrics)
-    // /metrics scrape surface (reference: metrics.go:40-57)
-    val metricsServer =
-      try Some(new MetricsServer(metrics, a.cfg.metricsPort).start())
-      catch { case e: Exception =>
-        System.err.println(s"[ingestor] metrics server failed to bind: ${e.getMessage}")
-        None
-      }
-
     val rows = a.mode match {
       case "synthetic" =>
         // reference event shape {ts, user_id, action, payload}
@@ -214,39 +214,54 @@ object IngestorCli {
         CdcStreaming.translate(src)
       case other => sys.error(s"unknown mode: $other (synthetic|cdc|curate)")
     }
-
-    // fork-free checkpoint log writes on `file:` checkpoints for the
-    // query's whole life, unless the session already names its own
-    // checkpoint file manager
-    val query = LocalCheckpointFileManager.registeredFor(spark) {
-      val q = Sinks.append(rows, a.checkpoint, sink).start()
-      if (a.mode == "synthetic") {
+    // a `file:` topic is a finite fixture, not an endless one: drain
+    // the files present at start, then stop; files added meanwhile
+    // wait for the next run. ProcessingTime(0) is Spark's default
+    val trigger =
+      if (a.mode == "cdc" && fileBroker(a).isDefined) Trigger.AvailableNow()
+      else Trigger.ProcessingTime(0L)
+    // real OTLP/HTTP span export when --otlp is given (reference runs
+    // its otlptracehttp exporter unconditionally, tracing.go:19-51;
+    // here it is opt-in so a database-free local run needs no collector)
+    val otlpExporter = a.otlp.map {
+      case "" => new OtlpSpanExporter()
+      case ep => new OtlpSpanExporter(endpoint = ep)
+    }
+    val metrics = new IngestionMetrics(spanExporter = otlpExporter)
+    spark.streams.addListener(metrics)
+    // /metrics scrape surface (reference: metrics.go:40-57)
+    val metricsServer =
+      try Some(new MetricsServer(metrics, a.cfg.metricsPort).start())
+      catch { case e: Exception =>
+        System.err.println(s"[ingestor] metrics server failed to bind: ${e.getMessage}")
+        None
+      }
+    try {
+      // fork-free checkpoint log writes on `file:` checkpoints for the
+      // query's whole life, unless the session already names its own
+      // checkpoint file manager
+      val query = LocalCheckpointFileManager.registeredFor(spark) {
+        val q = Sinks.append(rows, a.checkpoint, sink).trigger(trigger).start()
         // bounded run then park (reference semantics, cmd/root.go:143-146):
         // here "park" = clean stop after the duration
-        SyntheticSource.runBounded(q, a.durationS * 1000L)
-      } else if (fileBroker(a).isDefined) {
-        // file transport is a finite fixture, not an endless topic:
-        // drain everything present, then stop cleanly
-        q.processAllAvailable()
-        q.stop()
+        if (a.mode == "synthetic") SyntheticSource.runBounded(q, a.durationS * 1000L)
         q.awaitTermination()
-      } else {
-        q.awaitTermination()
+        q
       }
-      q
+      // the listener bus delivers asynchronously: without this barrier
+      // the final micro-batches may be missing from the rendered counts
+      // (and gone for good — the listener is removed below). A false
+      // return (bus delayed past the timeout) is surfaced, not swallowed
+      if (!metrics.awaitTerminated(query.id, 10000L))
+        System.err.println(
+          s"[ingestor] WARN: listener bus did not deliver query ${query.id} " +
+            "termination within 10s — rendered counts may be incomplete")
+      println(MetricsServer.render(metrics))
+      metrics
+    } finally {
+      otlpExporter.foreach(_.flush(5000)) // drain the async span queue
+      metricsServer.foreach(_.stop())
+      spark.streams.removeListener(metrics)
     }
-    // the listener bus delivers asynchronously: without this barrier
-    // the final micro-batches may be missing from the rendered counts
-    // (and gone for good — the listener is removed below). A false
-    // return (bus delayed past the timeout) is surfaced, not swallowed
-    if (!metrics.awaitTerminated(query.id, 10000L))
-      System.err.println(
-        s"[ingestor] WARN: listener bus did not deliver query ${query.id} " +
-          "termination within 10s — rendered counts may be incomplete")
-    otlpExporter.foreach(_.flush(5000)) // drain the async span queue
-    println(MetricsServer.render(metrics))
-    metricsServer.foreach(_.stop())
-    spark.streams.removeListener(metrics)
-    metrics
   }
 }

@@ -47,19 +47,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   * reads ≤ (distinct prefixes in batch) × 2 GB and one that rescans
   * half a terabyte per batch. Per-partition files also stay
   * independently compactable.
-  *
-  * Pre-v2 layouts (flat files under `storeDir`, or the interim
-  * `band=N` partitioning without the version directory) are migrated
-  * in place on the first batch: legacy files are read, re-written
-  * into the v2 layout, and deleted — so an existing checkpointed
-  * stream upgrades cleanly instead of hitting Spark's "conflicting
-  * directory structures" error on a mixed listing.
   */
 object StreamingDedup {
 
-  /** Layout version directory: partitioned stores live here, keeping
-    * them disjoint from any legacy flat files still in `storeDir`.
-    */
+  /** Layout version directory: partitioned stores live here. */
   private val V2 = "v2"
 
   private[streaming] def v2Path(storeDir: String): String = s"$storeDir/$V2"
@@ -116,7 +107,6 @@ object StreamingDedup {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        migrateFpStore(spark, storeDir)
         val fp = batch.withColumn("__fp", TextFns.fingerprint(col(textCol)))
           .persist() // prefix collect + anti-join both consume it; one batch, tiny
         try {
@@ -162,29 +152,12 @@ object StreamingDedup {
       "bsig string, s1 bigint, s2 bigint, band int, bpfx string")
 
   /** The full fingerprint store (no pruning) — compaction / audit
-    * reads, and pre-v2 compatibility for callers that held a flat
-    * store path.
+    * reads.
     */
   def existingStore(spark: SparkSession, storeDir: String): DataFrame = {
     val p = v2Path(storeDir)
     if (pathExists(spark, p)) spark.read.schema(FpStoreSchema).parquet(p).select("fp")
-    else if (pathExists(spark, storeDir)) spark.read.parquet(storeDir).select("fp")
     else emptyDf(spark, "fp string")
-  }
-
-  /** One-time in-place migration of a pre-v2 flat fingerprint store
-    * (parquet files directly under `storeDir`, schema `fp string`)
-    * into the prefix-partitioned v2 layout. Idempotent; no-op when
-    * only v2 (or nothing) exists.
-    */
-  def migrateFpStore(spark: SparkSession, storeDir: String): Unit = {
-    val legacy = legacyFiles(spark, storeDir)
-    if (legacy.nonEmpty) {
-      spark.read.parquet(legacy: _*)
-        .select(col("fp"), substring(col("fp"), 1, 2).as("pfx"))
-        .write.partitionBy("pfx").mode(SaveMode.Append).parquet(v2Path(storeDir))
-      deletePaths(spark, legacy)
-    }
   }
 
   /** Existence probe through the Hadoop `FileSystem` resolved from the
@@ -196,31 +169,6 @@ object StreamingDedup {
   private[streaming] def pathExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Top-level entries of `storeDir` that belong to a pre-v2 layout:
-    * data files (flat stores) and partition directories like `band=N`
-    * (the interim tier-3 layout) — everything except the `v2` dir and
-    * commit markers.
-    */
-  private def legacyFiles(spark: SparkSession, storeDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filterNot { st =>
-        val n = st.getPath.getName
-        n == V2 || n.startsWith("_") || n.startsWith(".")
-      }
-      .map(_.getPath.toString)
-  }
-
-  private def deletePaths(spark: SparkSession, paths: Seq[String]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    paths.foreach { s =>
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(conf).delete(p, true)
-    }
   }
 
   // ---------------------------------------------------------------
@@ -300,7 +248,6 @@ object StreamingDedup {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        migrateSigStore(spark, storeDir)
         val b = batch.persist() // signature pass + inner-pair verify reuse it
         try {
           val sig = signatures(b, idCol, textCol)
@@ -345,32 +292,6 @@ object StreamingDedup {
       spark.read.schema(SigStoreSchema).parquet(p)
         .where(pred).select("bsig", "s1", "s2", "band")
     } else emptyDf(spark, "bsig string, s1 bigint, s2 bigint, band int")
-  }
-
-  /** One-time migration of pre-v2 signature-store layouts into v2:
-    * handles both the flat layout (band as a data column) and the
-    * interim `partitionBy("band")` layout written directly under
-    * `storeDir`. Idempotent.
-    */
-  def migrateSigStore(spark: SparkSession, storeDir: String): Unit = {
-    val legacy = legacyFiles(spark, storeDir)
-    if (legacy.nonEmpty) {
-      val (bandDirs, flat) = legacy.partition(_.matches(".*/band=\\d+$"))
-      val parts = Seq(
-        if (flat.nonEmpty) Some(spark.read.parquet(flat: _*)
-          .select("bsig", "s1", "s2", "band")) else None,
-        if (bandDirs.nonEmpty) Some(
-          spark.read.option("basePath", storeDir)
-            .schema("bsig string, s1 bigint, s2 bigint, band int")
-            .parquet(bandDirs: _*)
-            .select("bsig", "s1", "s2", "band")) else None
-      ).flatten
-      parts.reduce(_ unionByName _)
-        .withColumn("bpfx", bpfxOf(col("bsig")))
-        .write.partitionBy("band", "bpfx")
-        .mode(SaveMode.Append).parquet(v2Path(storeDir))
-      deletePaths(spark, legacy)
-    }
   }
 
   private[streaming] def emptyDf(spark: SparkSession, ddl: String): DataFrame =

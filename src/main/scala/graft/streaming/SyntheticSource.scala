@@ -55,17 +55,14 @@ object SyntheticSource {
         lit("example-payload").as("payload"))
 
   /** ST1 bounded run: let the started query generate for
-    * `durationMs`, drain, stop — the reference's `--duration` contract
-    * (cmd/root.go:143-146); "park forever" maps to the driver process
-    * staying alive after stop(). `durationMs = 0` is the bounded drain
-    * of whatever is available now (specs over a MemoryStream).
+    * `durationMs` (> 0), drain, stop — the reference's `--duration`
+    * contract (cmd/root.go:143-146); "park forever" maps to the driver
+    * process staying alive after stop(). A stream that fails first
+    * rethrows its `StreamingQueryException` here.
     */
   def runBounded(query: StreamingQuery, durationMs: Long): Unit = {
     val drainGraceMs = 10000L
-    val deadline = System.currentTimeMillis() + durationMs
-    while (System.currentTimeMillis() < deadline && query.isActive)
-      Thread.sleep(Math.min(100L, Math.max(1L, deadline - System.currentTimeMillis())))
-    if (query.isActive) {
+    if (!query.awaitTermination(durationMs)) {
       // drain what the source generated inside the window before
       // stopping: the reference inserts each generated event inline
       // before its loop exits (cmd/root.go:126-147), so a bounded run
@@ -98,7 +95,7 @@ object SyntheticSource {
       // returns normally if the watchdog stops the query mid-drain
       try query.processAllAvailable()
       finally watchdog.interrupt()
-      if (query.isActive) query.stop()
+      query.stop()
     }
   }
 }

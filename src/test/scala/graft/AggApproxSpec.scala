@@ -102,7 +102,7 @@ class AggApproxSpec extends SparkSpec with NeedsTestdata {
       (i.toLong, if (rnd.nextInt(2) == 0) "buy" else "err",
         s"u${rnd.nextInt(300)}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("theta-store").toString
+    val dir = tempDir("theta-store")
     def template = StreamingTheta.partialState(
       all.take(1).toDF("id", "seg", "u"), Seq("seg"), col("u"))
     def estimates() = StreamingTheta.currentEstimates(
@@ -148,8 +148,8 @@ class AggApproxSpec extends SparkSpec with NeedsTestdata {
     import graft.streaming.{StateStore, StreamingTheta}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("theta-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("theta-ck").toString
+    val dir = tempDir("theta-ms")
+    val ckpt = tempDir("theta-ck")
     val in = MemoryStream[(Long, String, String)]
     val q = StateStore.maintain(in.toDF().toDF("id", "seg", "u"), ckpt)(
       StreamingTheta.applyBatch(_, Seq("seg"), col("u"), dir, _)).start()

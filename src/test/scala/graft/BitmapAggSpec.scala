@@ -121,7 +121,7 @@ class BitmapAggSpec extends SparkSpec {
       (i.toLong, if (rnd.nextInt(2) == 0) "buy" else "err",
         pool(rnd.nextInt(pool.size)))
     }
-    val dir = java.nio.file.Files.createTempDirectory("bm-store").toString
+    val dir = tempDir("bm-store")
     def template = StreamingBitmap.partialState(
       all.take(1).toDF("id", "seg", "m"), Seq("seg"), col("m"))
     def counts() = StreamingBitmap.currentCardinalities(
@@ -178,8 +178,8 @@ class BitmapAggSpec extends SparkSpec {
     import graft.streaming.{StateStore, StreamingBitmap}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("bm-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bm-ck").toString
+    val dir = tempDir("bm-ms")
+    val ckpt = tempDir("bm-ck")
     val in = MemoryStream[(Long, String, Long)]
     val q = StateStore.maintain(in.toDF().toDF("id", "seg", "m"), ckpt)(
       StreamingBitmap.applyBatch(_, Seq("seg"), col("m"), dir, _)).start()

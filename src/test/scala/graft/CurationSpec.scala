@@ -1453,7 +1453,7 @@ class CurationSpec extends SparkSpec {
       (i.toLong, s"$w $p ${fill(rnd.nextInt(fill.size))}")
     }
     def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("coll-store").toString
+    val dir = tempDir("coll-store")
     def template = graft.operators.Curation.collocationCounts(
       df(all.take(1)), col("text"))
     def live(): Seq[(String, String, Long, Long, Long, Double, Double)] =
@@ -1488,8 +1488,8 @@ class CurationSpec extends SparkSpec {
     // MemoryStream e2e on a fresh store
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir2 = java.nio.file.Files.createTempDirectory("coll-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("coll-ck").toString
+    val dir2 = tempDir("coll-ms")
+    val ckpt = tempDir("coll-ck")
     val in = MemoryStream[(Long, String)]
     val q = StateStore.maintain(in.toDF().toDF("doc_id", "text"), ckpt)(
       StreamingCollocations.applyBatch(_, col("text"), dir2, _)).start()

@@ -407,8 +407,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(16)(d => math.sin(i * 0.53 + d * 0.77).toFloat)))
       .toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") % 15 === 0)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivfidx-spec").toString
+    val idx = tempDir("graft-ivfidx-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", idx,
       nlist = 8, iters = 2)
     val indexed = Similarity.ivfTopKIndexed(spark, idx, q,
@@ -438,8 +437,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val q = vecs.filter(col("vec_id") % 15 === 0)
       .select("vec_id", "embedding")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivffidx-spec").toString
+    val idx = tempDir("graft-ivffidx-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", idx,
       nlist = 8, iters = 2, attrs = Seq("label"))
     val pred = col("label") % 2 === 0
@@ -487,10 +485,8 @@ class DedupSimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(16)(d => math.sin(i * 0.53 + d * 0.77).toFloat)))
       .toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") % 15 === 0)
-    val flat = java.nio.file.Files
-      .createTempDirectory("graft-ivfflat-spec").toString
-    val pq = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-spec").toString
+    val flat = tempDir("graft-ivfflat-spec")
+    val pq = tempDir("graft-ivfpq-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", flat,
       nlist = 8, iters = 2)
     Similarity.buildIvfPqIndex(vecs, "vec_id", "embedding", pq,
@@ -537,10 +533,8 @@ class DedupSimilaritySpec extends SparkSpec {
       })
     }.toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") % 10 === 0)
-    val flat = java.nio.file.Files
-      .createTempDirectory("graft-ivfflat2-spec").toString
-    val pq = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq2-spec").toString
+    val flat = tempDir("graft-ivfflat2-spec")
+    val pq = tempDir("graft-ivfpq2-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", flat,
       nlist = 8, iters = 2)
     Similarity.buildIvfPqIndex(vecs, "vec_id", "embedding", pq,
@@ -579,10 +573,8 @@ class DedupSimilaritySpec extends SparkSpec {
         if (d % 4 == c) 1.0f else 0.1f * c))
     }.toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") % 20 === 0)
-    val flat = java.nio.file.Files
-      .createTempDirectory("graft-ivfflat3-spec").toString
-    val pq = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq3-spec").toString
+    val flat = tempDir("graft-ivfflat3-spec")
+    val pq = tempDir("graft-ivfpq3-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", flat,
       nlist = 2, iters = 2)
     Similarity.buildIvfPqIndex(vecs, "vec_id", "embedding", pq,
@@ -673,8 +665,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(16)(d => math.sin(i * 0.53 + d * 0.77).toFloat)))
       .toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") % 15 === 0)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-tierauto-spec").toString
+    val idx = tempDir("graft-tierauto-spec")
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", idx,
       nlist = 16, iters = 2)
     def rows(df: org.apache.spark.sql.DataFrame) =

@@ -1,7 +1,7 @@
 package graft
 
 import graft.tools.DumpPlans
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class DumpPlansSpec extends SparkSpec {
   import spark.implicits._
@@ -10,7 +10,7 @@ class DumpPlansSpec extends SparkSpec {
     * plans only need the schema, so the spec runs without the parquet
     * fixtures. */
   private lazy val sf: String = {
-    val dir = Files.createTempDirectory("dumpplans-sf").toString
+    val dir = tempDir("dumpplans-sf")
     Seq(("A", "F", 17.0, 21168.23, 0.04, 0.02), ("N", "O", 36.0, 45983.16, 0.09, 0.06))
       .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
         "l_discount", "l_tax")
@@ -23,7 +23,7 @@ class DumpPlansSpec extends SparkSpec {
   }
 
   test("dump writes one <query>_<suffix>.txt per query with the formatted plan") {
-    val dir = Files.createTempDirectory("dumpplans")
+    val dir = Paths.get(tempDir("dumpplans"))
     val written = DumpPlans.dump(spark, sf, dir.toString, "after", Seq("q1_agg", "q_topk"))
     assert(written.map(_.getFileName.toString) ==
       Seq("q1_agg_after.txt", "q_topk_after.txt"))
@@ -36,7 +36,7 @@ class DumpPlansSpec extends SparkSpec {
   }
 
   test("a plan that runs a graft Aggregator names it without an identity hash") {
-    val dir = Files.createTempDirectory("dumpplans")
+    val dir = Paths.get(tempDir("dumpplans"))
     val Seq(p) = DumpPlans.dump(spark, sf, dir.toString, "after", Seq("q_topk_freq"))
     val txt = Files.readString(p)
     val hashed = raw"graft\.functions\.\w+@[0-9a-f]+".r.findAllIn(txt).toSeq
@@ -45,7 +45,7 @@ class DumpPlansSpec extends SparkSpec {
   }
 
   test("an unknown query name fails before anything is written") {
-    val dir = Files.createTempDirectory("dumpplans").resolve("out")
+    val dir = Paths.get(tempDir("dumpplans"), "out")
     val e = intercept[IllegalArgumentException] {
       DumpPlans.dump(spark, sf, dir.toString, "after", Seq("q1_agg", "q_no_such_query"))
     }

@@ -14,6 +14,8 @@ class IndexCacheSpec extends AnyFunSuite {
     * table; only its mtime matters to the cache key.
     */
   private def dataset(): Path = {
+    // own temp dir: no Spark session here, and `cleanup` deletes the
+    // dataset together with the cache entries named after it
     val d = Files.createTempDirectory("idxcache-ds")
     Files.createDirectories(d.resolve("embeddings.parquet"))
     d

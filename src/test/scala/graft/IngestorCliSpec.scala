@@ -5,6 +5,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.streaming.{ClickHouseHttp, LocalCheckpointFileManager, Sinks}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import scala.jdk.CollectionConverters._
 
 /** CLI flag/env parsing mirrors the reference's cobra surface
@@ -66,6 +67,41 @@ class IngestorCliSpec extends SparkSpec {
     assert(Sinks.parse("clickhouse", a.cfg) === ClickHouseHttp("ch.prod", "db", "t"))
     assert(Sinks.parse("clickhouse:ch1:9000", a.cfg) === ClickHouseHttp("ch1:9000", "db", "t"))
     assert(Sinks.parse("parquet:/tmp/x", a.cfg) === Sinks.Parquet("/tmp/x"))
+  }
+
+  test("--rate and --duration take whole numbers > 0, rejected at parse naming the flag") {
+    for (flag <- Seq("--rate", "--duration"); v <- Seq("0", "-5", "x", "1.5")) {
+      val e = intercept[IllegalArgumentException](IngestorCli.parse(Array(flag, v)))
+      assert(e.getMessage.contains(flag) && e.getMessage.contains(v), e.getMessage)
+    }
+  }
+
+  /** Runs `a` against a sink that refuses connections, with `/metrics`
+    * on a known port: the run fails with the stream's exception, and
+    * leaves no listener registered and the port closed.
+    */
+  private def failsAndTearsDown(a: IngestorCli.Args): Unit = {
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    val listeners = spark.streams.listListeners().toSet
+    intercept[StreamingQueryException](IngestorCli.run(spark, a.copy(
+      cfg = a.cfg.copy(metricsPort = port), sink = "clickhouse:127.0.0.1:1")))
+    assert(spark.streams.listListeners().toSet === listeners, "the run's listener is still registered")
+    intercept[java.net.ConnectException](new java.net.Socket("127.0.0.1", port).close())
+  }
+
+  test("a failed file: drain throws and tears the run down") {
+    val dir = tempDir("graft-cli-cdc-fail")
+    val topic = java.nio.file.Paths.get(dir, "topic")
+    Files.createDirectories(topic)
+    Files.writeString(topic.resolve("part-0.jsonl"),
+      """{"before":null,"after":{"id":1,"name":"n","email":"e"},"source":{"lsn":1,"ts_us":1},"op":"c","ts_us":1}""" + "\n")
+    failsAndTearsDown(IngestorCli.Args(mode = "cdc",
+      cfg = graft.pipeline.IngestConfig(brokers = Seq(s"file:$topic")), checkpoint = s"$dir/ckpt"))
+  }
+
+  test("a synthetic run that fails before its deadline throws and tears the run down") {
+    val dir = tempDir("graft-cli-synthetic-fail")
+    failsAndTearsDown(IngestorCli.Args(rate = 100L, durationS = 30L, checkpoint = s"$dir/ckpt"))
   }
 
   test("synthetic run end-to-end: rows POST to stub ClickHouse, spans to stub OTLP collector") {

@@ -2115,7 +2115,7 @@ class IntervalStatsSpec extends SparkSpec {
       ("g", u, (rnd.nextInt(30) + (u % 3)).toLong)
     } ++ (0 until 60).map(i => ("g", 7L, 12L)) // hard duplicates
     def df(rows: Seq[(String, Long, Long)]) = rows.toDF("k", "u", "day")
-    val dir = java.nio.file.Files.createTempDirectory("surv-store").toString
+    val dir = tempDir("surv-store")
     def template = StreamingSurvival.partialState(
       df(all.take(1)), Seq("k"), col("u"), col("day"))
     def liveKm() = StreamingSurvival.currentSurvival(
@@ -2184,8 +2184,8 @@ class IntervalStatsSpec extends SparkSpec {
     // MemoryStream e2e
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir2 = java.nio.file.Files.createTempDirectory("surv-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("surv-ck").toString
+    val dir2 = tempDir("surv-ms")
+    val ckpt = tempDir("surv-ck")
     val in = MemoryStream[(String, Long, Long)]
     val q = StateStore.maintain(in.toDF().toDF("k", "u", "day"), ckpt)(
       StreamingSurvival.applyBatch(_, Seq("k"), col("u"), col("day"),

@@ -125,7 +125,7 @@ class LayoutSpec extends SparkSpec {
 
   test("L4 TTL maintenance: rolls only newly-aged partitions, fresh unread; totals invariant; idempotent replay") {
     import graft.operators.Ttl
-    val path = java.nio.file.Files.createTempDirectory("ttlstore").toString
+    val path = tempDir("ttlstore")
     val rnd = new scala.util.Random(29)
     // 600 rows over buckets 0..19 (100 s each), 3 keys
     val rows = (0 until 600).map(i =>

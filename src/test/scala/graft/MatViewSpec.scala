@@ -109,7 +109,7 @@ class MatViewSpec extends SparkSpec {
   }
 
   test("streaming store: per-batch folds equal the batch aggregate; replay is a no-op; versions pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("matview").toString
+    val dir = tempDir("matview")
     val all = rows(300, seed = 9)
     val batches = all.grouped(100).toSeq
     def state() = asMap(StateStore.readVersioned(
@@ -151,8 +151,8 @@ class MatViewSpec extends SparkSpec {
 
   test("streaming store: end-to-end through foreachBatch on a MemoryStream") {
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("matview-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("matview-ck").toString
+    val dir = tempDir("matview-ms")
+    val ckpt = tempDir("matview-ck")
     val in = MemoryStream[(Long, String, Double, String)]
     val q = StateStore.maintain(in.toDF().toDF("id", "k", "v", "u"), ckpt)(
       StreamingMatView.applyBatch(_, Seq("k"), col("v"), col("u"), dir, _))

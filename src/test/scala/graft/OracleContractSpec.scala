@@ -80,7 +80,7 @@ class OracleContractSpec extends SparkSpec {
     // Dump the oracle registry; DuckDB DESCRIBEs each query against
     // the fixture views (types only, nothing executes) and emits
     // name\tcolumn\ttype lines we compare in-JVM.
-    val tmp = java.nio.file.Files.createTempDirectory("oracle-contract")
+    val tmp = java.nio.file.Paths.get(tempDir("oracle-contract"))
     val sqlJson = tmp.resolve("oracle_sql.json")
     val entries = SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (k, v) =>
       val esc = v.replace("\\", "\\\\").replace("\"", "\\\"")

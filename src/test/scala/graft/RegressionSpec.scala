@@ -137,7 +137,7 @@ class RegressionSpec extends SparkSpec {
       (i.toLong, k, x1, x2,
         1.0 + 0.5 * x1 - 0.25 * x2 + (rnd.nextInt(100) - 50) / 100.0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("reg-store").toString
+    val dir = tempDir("reg-store")
     def df(rows: Seq[(Long, String, Double, Double, Double)]) =
       rows.toDF("id", "k", "x1", "x2", "y")
     def template = graft.operators.Regression.sums2(
@@ -182,8 +182,8 @@ class RegressionSpec extends SparkSpec {
     import graft.streaming.{StateStore, StreamingRegression}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("reg-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("reg-ck").toString
+    val dir = tempDir("reg-ms")
+    val ckpt = tempDir("reg-ck")
     val in = MemoryStream[(Long, String, Double, Double, Double)]
     val q = StateStore.maintain(
       in.toDF().toDF("id", "k", "x1", "x2", "y"), ckpt)(

@@ -284,8 +284,7 @@ class RetrievalSpec extends SparkSpec {
     val queries = Seq(
       (9000L, "the of and alpha"), (9001L, "the of and gamma"))
       .toDF("bench_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-bm25idx-spec").toString
+    val idx = tempDir("graft-bm25idx-spec")
     Retrieval.buildPostingsIndex(
       corpus, "doc_id", col("text"), idx, nBuckets = 16)
     def direct(cap: Double) = Retrieval.bm25JoinTopK(
@@ -310,8 +309,7 @@ class RetrievalSpec extends SparkSpec {
   test("postings index: partition pruning keeps non-query buckets unread; no-vocabulary query is empty") {
     val corpus = (0 until 50).map(i =>
       (i.toLong, s"tok$i shared")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-bm25idx-prune").toString
+    val idx = tempDir("graft-bm25idx-prune")
     Retrieval.buildPostingsIndex(
       corpus, "doc_id", col("text"), idx, nBuckets = 16)
     val q = Seq((1L, "tok7")).toDF("bench_id", "text")
@@ -349,8 +347,7 @@ class RetrievalSpec extends SparkSpec {
     }
     val queries = Seq((9000L, "alpha gamma"), (9001L, "the beta"))
       .toDF("bench_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-postings-store").toString
+    val store = tempDir("graft-postings-store")
     def fromStore(cap: Double) = StreamingPostings.bm25TopKFromStore(
       spark, store, "doc_id", queries, "bench_id", col("text"),
       k = 5, maxDfFraction = cap)
@@ -422,8 +419,7 @@ class RetrievalSpec extends SparkSpec {
     // a STRING-id corpus: the empty-window read (all batch dirs on
     // disk, pointer not yet moved — the crash window) must carry the
     // string id type, not a hardcoded long
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-postings-sid").toString
+    val store = tempDir("graft-postings-sid")
     StreamingPostings.applyBatch(
       Seq(("d-1", "alpha beta")).toDF("doc_id", "text"),
       "doc_id", col("text"), store, batchId = 0L)
@@ -444,8 +440,7 @@ class RetrievalSpec extends SparkSpec {
     assert(degenerate.unionByName(committed).count() == committed.count())
     // a virgin store (nothing ever written) still returns the
     // documented long default
-    val virgin = java.nio.file.Files
-      .createTempDirectory("graft-postings-virgin").toString
+    val virgin = tempDir("graft-postings-virgin")
     assert(read(virgin).schema("doc_id").dataType === LongType)
   }
 
@@ -453,10 +448,8 @@ class RetrievalSpec extends SparkSpec {
     import graft.streaming.{StateStore, StreamingPostings}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-postings-ms").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-postings-ck").toString
+    val store = tempDir("graft-postings-ms")
+    val ckpt = tempDir("graft-postings-ck")
     val docs = (0 until 120).map(i =>
       (i.toLong, s"tok${i % 7} shared tok${i % 3}"))
     val in = MemoryStream[(Long, String)]

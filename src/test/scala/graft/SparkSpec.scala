@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import graft.streaming.{StateStore, SyntheticSource}
+import graft.streaming.StateStore
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,10 +27,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createTempDirectory(root, prefix).toString
   }
 
-  /** Start `w` and drain what its source holds now, bounded like a
-    * `--duration` run's drain, then stop.
+  /** Start `w`, sink what its source holds now and wait for the query
+    * to stop itself, as a `file:` drain does.
     */
-  protected def drain(w: DataStreamWriter[Row]): Unit = SyntheticSource.runBounded(w.start(), 0L)
+  protected def drain(w: DataStreamWriter[Row]): Unit =
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
 
   /** Driver-generated parquet fixtures live outside the repo and are
     * absent on CI runners. Call as the first statement of any test

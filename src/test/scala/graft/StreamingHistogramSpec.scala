@@ -39,7 +39,7 @@ class StreamingHistogramSpec extends SparkSpec {
       .as[(String, Long, Option[Double], Option[Boolean])].collect().toSet
 
   test("ST17: store scoring is bit-equal to batch madZScore after every commit; replay no-op; crash heal") {
-    val store = Files.createTempDirectory("graft-shist").toString
+    val store = tempDir("graft-shist")
     val (b1, b2, b3) = (rows.take(100), rows.slice(100, 220),
       rows.drop(220))
     StreamingHistogram.applyBatch(df(b1), Seq("k"), col("v"), store, 0L)
@@ -81,7 +81,7 @@ class StreamingHistogramSpec extends SparkSpec {
 
   test("ST17d: winsorizedFromStore is bit-equal to batch winsorizedStats after every commit; replay/crash-safe") {
     import graft.operators.StatsAgg
-    val store = Files.createTempDirectory("graft-swin").toString
+    val store = tempDir("graft-swin")
     // the store's state is the floor-quantized histogram (the ST17
     // contract, same as madZScore's own __w grid) — the batch
     // reference therefore runs on the identical quantized values,
@@ -117,7 +117,7 @@ class StreamingHistogramSpec extends SparkSpec {
   }
 
   test("ST17: percentileOf reconstructs Spark percentile exactly at every tested p") {
-    val store = Files.createTempDirectory("graft-shist-pct").toString
+    val store = tempDir("graft-shist-pct")
     StreamingHistogram.applyBatch(df(rows), Seq("k"), col("v"), store, 0L)
     val template = StreamingHistogram.partial(df(rows).limit(0),
       Seq("k"), col("v"), 2)
@@ -135,7 +135,7 @@ class StreamingHistogramSpec extends SparkSpec {
 
   test("ST18: psiFromStore is bit-equal to batch psi(reference ∪ ingested); drifted ingest screams, identical ingest is 0") {
     import graft.operators.StatsAgg
-    val store = Files.createTempDirectory("graft-shist-psi").toString
+    val store = tempDir("graft-shist-psi")
     // reference: uniform over 10 values; ingest two batches — one
     // identical in distribution, one fully shifted
     val ref = (1 to 200).map(i => ("k", i.toLong, (i % 10) * 1.0))
@@ -166,7 +166,7 @@ class StreamingHistogramSpec extends SparkSpec {
 
   test("ST19: fdrScores equals the batch madZScore → p → fdrAdjust composition; degenerate keys drop as hypotheses") {
     import graft.operators.StatsAgg
-    val store = Files.createTempDirectory("graft-shist-fdr").toString
+    val store = tempDir("graft-shist-fdr")
     StreamingHistogram.applyBatch(df(rows), Seq("k"), col("v"), store, 0L)
     val got = StreamingHistogram.fdrScores(df(rows), Seq("k"),
       tie = col("id"), value = col("v"), spark, store)
@@ -194,8 +194,8 @@ class StreamingHistogramSpec extends SparkSpec {
   }
 
   test("ST17: MemoryStream end-to-end — maintain folds micro-batches; scoring matches batch over everything ingested") {
-    val store = Files.createTempDirectory("graft-shist-e2e").toString
-    val ckpt = Files.createTempDirectory("graft-shist-ckpt").toString
+    val store = tempDir("graft-shist-e2e")
+    val ckpt = tempDir("graft-shist-ckpt")
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long, Double)]
     val q = StateStore.maintain(mem.toDF().toDF("k", "id", "v"), ckpt)(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.Curation
 import graft.streaming.{StateStore, StreamingNgramLm}
 import org.apache.spark.sql.functions._
@@ -34,7 +33,7 @@ class StreamingNgramLmSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
 
   test("ST16: per-batch folds score bit-equal to the batch KN operator; replay no-op; crash heal") {
-    val store = Files.createTempDirectory("graft-snglm").toString
+    val store = tempDir("graft-snglm")
     // virgin store: well-formed empty result
     assert(fromStore(store, docsUpTo(5)).isEmpty)
     StreamingNgramLm.applyBatch(docsUpTo(3), "doc_id", col("text"),
@@ -67,7 +66,7 @@ class StreamingNgramLmSpec extends SparkSpec {
   }
 
   test("ST16: out-of-corpus documents score over their in-model trigram positions only") {
-    val store = Files.createTempDirectory("graft-snglm-oov").toString
+    val store = tempDir("graft-snglm-oov")
     StreamingNgramLm.applyBatch(docsUpTo(5), "doc_id", col("text"),
       store, batchId = 0L)
     // "a b c" is in-model; "q q q" is not — n_trigrams counts only
@@ -103,8 +102,8 @@ class StreamingNgramLmSpec extends SparkSpec {
   test("ST16: end-to-end through foreachBatch on a MemoryStream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val store = Files.createTempDirectory("graft-snglm-ms").toString
-    val ckpt = Files.createTempDirectory("graft-snglm-ck").toString
+    val store = tempDir("graft-snglm-ms")
+    val ckpt = tempDir("graft-snglm-ck")
     val in = MemoryStream[(Long, String)]
     val q = StateStore.maintain(in.toDF().toDF("doc_id", "text"), ckpt)(
       StreamingNgramLm.applyBatch(_, "doc_id", col("text"), store, _))

@@ -199,25 +199,6 @@ class StreamingSpec extends SparkSpec {
       s"probe must prune: read $probeScanned of $allScanned store files")
   }
 
-  test("X1-streaming: pre-v2 flat fingerprint store migrates in place") {
-    val dir = tempDir("graft-sdedup-mig")
-    val store = s"$dir/store"
-    // legacy layout: flat parquet of fps directly under storeDir
-    Seq("00aa", "ffbb", "7c1d").toDF("fp").write.parquet(store)
-    StreamingDedup.migrateFpStore(spark, store)
-    val fps = StreamingDedup.existingStore(spark, store).as[String].collect().toSet
-    assert(fps === Set("00aa", "ffbb", "7c1d"))
-    // no flat data files remain at the top level → re-migration no-ops
-    // and a recursive read can't hit conflicting directory structures
-    val top = new java.io.File(store).listFiles().map(_.getName).toSet
-    assert(top.filter(n => !n.startsWith("_") && !n.startsWith(".")) === Set("v2"))
-    StreamingDedup.migrateFpStore(spark, store) // idempotent
-    assert(StreamingDedup.existingStore(spark, store).count() === 3)
-    // pruning honours the partition layout
-    val pruned = StreamingDedup.prunedFpStore(spark, store, Seq("00")).as[String].collect()
-    assert(pruned.toSet === Set("00aa"))
-  }
-
   test("X2-streaming: cross-batch NEAR-dup dedup against the SimHash signature store") {
     implicit val sq = spark.sqlContext
     val dir = tempDir("graft-sneardup")
@@ -278,28 +259,6 @@ class StreamingSpec extends SparkSpec {
     // probe still prunes after compaction
     val pruned = StreamingDedup.prunedFpStore(spark, store, Seq("ff")).as[String].collect()
     assert(pruned.toSet === Set("ffb1", "ffb2", "ffb3"))
-  }
-
-  test("X2-streaming: interim band-partitioned signature store migrates to v2") {
-    val dir = tempDir("graft-sneardup-mig")
-    val store = s"$dir/store"
-    // interim r4 layout: partitionBy("band") directly under storeDir
-    Seq(("00110011", 5L, 9L, 0), ("11001100", 7L, 3L, 1))
-      .toDF("bsig", "s1", "s2", "band")
-      .write.partitionBy("band").parquet(store)
-    StreamingDedup.migrateSigStore(spark, store)
-    val rows = spark.read.schema(StreamingDedup.SigStoreSchema).parquet(s"$store/v2")
-      .select("bsig", "s1", "s2", "band").as[(String, Long, Long, Int)]
-      .collect().toSet
-    assert(rows === Set(("00110011", 5L, 9L, 0), ("11001100", 7L, 3L, 1)))
-    val top = new java.io.File(store).listFiles().map(_.getName).toSet
-    assert(top.filter(n => !n.startsWith("_") && !n.startsWith(".")) === Set("v2"))
-    StreamingDedup.migrateSigStore(spark, store) // idempotent
-    assert(spark.read.schema(StreamingDedup.SigStoreSchema)
-      .parquet(s"$store/v2").count() === 2)
-    val pruned = StreamingDedup.prunedSigStore(spark, store, Seq((0, "0011")))
-      .select("bsig").as[String].collect()
-    assert(pruned.toSet === Set("00110011"))
   }
 
   test("X3-streaming: cross-batch embedding near-dup dedup against the LSH vector store") {

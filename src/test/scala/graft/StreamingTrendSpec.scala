@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.TimeSeries
 import graft.streaming.{StateStore, StreamingTrend}
 import org.apache.spark.sql.DataFrame
@@ -51,7 +50,7 @@ class StreamingTrendSpec extends SparkSpec {
     .collect().toSet
 
   test("ST20: all four trend reads are bit-equal to the batch operators after every commit; replay/crash heal") {
-    val store = Files.createTempDirectory("graft-strend").toString
+    val store = tempDir("graft-strend")
     val (b1, b2) = rows.splitAt(rows.size / 2)
     val template = StreamingTrend.partial(df(b1), Seq("k"), col("ep"), bucket)
 
@@ -116,8 +115,8 @@ class StreamingTrendSpec extends SparkSpec {
   }
 
   test("ST20: MemoryStream end-to-end — maintain folds micro-batches; trend reads match batch over everything ingested") {
-    val store = Files.createTempDirectory("graft-strend-e2e").toString
-    val ckpt = Files.createTempDirectory("graft-strend-ckpt").toString
+    val store = tempDir("graft-strend-e2e")
+    val ckpt = tempDir("graft-strend-ckpt")
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
     val q = StateStore.maintain(mem.toDF().toDF("k", "ep"), ckpt)(

@@ -232,7 +232,7 @@ class VersionedDedupSpec extends SparkSpec {
   }
 
   test("W1d storage face: bucket-partitioned history prunes files on an AS OF read") {
-    val dir = java.nio.file.Files.createTempDirectory("scd2part").toString
+    val dir = tempDir("scd2part")
     // 10 keys × 10 versions at t = k*100: per key, intervals
     // [k*100, (k+1)*100) for k<9 plus an open row at 900 — interval
     // buckets at bucketSeconds=100 are (k, k+1) and (9, open)
